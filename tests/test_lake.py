@@ -406,3 +406,141 @@ def test_delta_append_resolve_fold_maintenance(spark, tmp_path):
     tb = LakeTable.load(spark, root)
     got = {r["path"]: r.asDict() for r in tb.read_public().collect()}
     assert got["p1"]["content"] == "v9" and got["p1"]["commit"] == "c9"
+
+
+def _rows_by_key(df):
+    return {(r["repo"], r["path"]): r.asDict() for r in df.collect()}
+
+
+def test_delta_rows_respect_truncate_watermark(spark, tmp_path):
+    """A late pre-truncate delta row is dropped at read time exactly as
+    the merge (and the fold) drop it: read_public agrees before and
+    after fold_deltas."""
+    from wal_listener_spark.lake.table import LakeTable
+
+    tb = _mk(spark, tmp_path)
+    root = tb.root
+    tb.merge_batch(
+        _changes(spark, [("r1", "a", "c1", "py", "x", 120, "I")]),
+        "t0", 120, truncate_lsn=100,
+    )
+    tb = LakeTable.load(spark, root)
+    tb.append_delta(
+        _delta_changes(spark, [("r1", "b", "c0", "py", "y", True, 50, 50, "I")]),
+        "d0", 50,
+    )
+    tb = LakeTable.load(spark, root)
+    assert sorted(r["path"] for r in tb.read_public().collect()) == ["a"]
+    tb.fold_deltas()
+    tb = LakeTable.load(spark, root)
+    assert tb.delta_count == 0
+    assert sorted(r["path"] for r in tb.read_public().collect()) == ["a"]
+
+
+def test_fold_preserves_read_state(spark, tmp_path):
+    """fold_deltas() writes back exactly what the read path resolves:
+    read_public() — and the full stored rows, __clsn_* included — are
+    identical before and after the fold, over a populated base, TOAST
+    carry-forward, out-of-order generations and delete-then-reinsert.
+    Untouched buckets keep their files; only folded generations leave
+    the manifest."""
+    from wal_listener_spark.lake.table import LakeTable
+
+    tb = _mk(spark, tmp_path, buckets=4)
+    root = tb.root
+    base = [(f"r{i % 3}", f"p{i}", "c0", "en", f"v{i}", 10 + i, "I") for i in range(12)]
+    tb.merge_batch(_changes(spark, base), "m0", 40)
+    gens = [
+        # TOAST update (content unset) + delete of p1
+        [("r0", "p0", "c1", "en", None, False, None, 100, "U"),
+         ("r1", "p1", None, None, None, False, None, 101, "D")],
+        # out of order: an older explicit content set lands after the
+        # TOAST-skip at 100, and p2 updated
+        [("r0", "p0", "cX", "en", "v90", True, 90, 90, "U"),
+         ("r2", "p2", "c2", "en", "w2", True, 95, 95, "U")],
+        # an INSERT over p3's live base row (a delete + reinsert
+        # compacted within one epoch) and p1 reinserted after its delete
+        [("r0", "p3", "c3", "de", "z3", True, 120, 120, "I"),
+         ("r1", "p1", "c4", "fr", "z1", True, 130, 130, "I")],
+        # a stale change older than p4's base row is a no-op
+        [("r1", "p4", "cS", "en", "stale", True, 5, 5, "U")],
+    ]
+    for i, g in enumerate(gens):
+        tb = LakeTable.load(spark, root)
+        tb.append_delta(_delta_changes(spark, g), f"d{i}", 130)
+    tb = LakeTable.load(spark, root)
+    assert tb.delta_count == len(gens)
+    public_before = _rows_by_key(tb.read_public())
+    stored_before = _rows_by_key(tb.read())
+    buckets_before = dict(tb.manifest["buckets"])
+
+    stats = tb.fold_deltas()
+    tb = LakeTable.load(spark, root)
+    assert tb.delta_count == 0
+    assert stats["folded_batches"] == [f"d{i}" for i in range(len(gens))]
+    assert _rows_by_key(tb.read_public()) == public_before
+    assert _rows_by_key(tb.read()) == stored_before
+    for b, files in tb.manifest["buckets"].items():
+        if int(b) not in stats["buckets_rewritten"]:
+            assert files == buckets_before[b]
+        else:
+            assert len(files) == 1  # one file per rewritten bucket
+
+    got = public_before
+    assert got[("r0", "p0")]["commit"] == "c1"  # lsn 100 row wins
+    assert got[("r0", "p0")]["content"] == "v90"  # explicit set > TOAST
+    assert got[("r1", "p1")]["content"] == "z1"  # reinserted after delete
+    assert got[("r1", "p4")]["content"] == "v4"  # stale update ignored
+
+
+def test_background_fold_commits_with_next_delta(spark, tmp_path):
+    """start_fold() folds a frozen manifest copy off-thread; the next
+    append_delta commits the fold and its own delta as ONE snapshot,
+    dropping only the folded generations. A fold resolved by
+    commit_fold lands alone; an abandoned fold leaves an orphan dir
+    that expire_snapshots reclaims."""
+    from wal_listener_spark.lake.table import LakeTable
+
+    tb = _mk(spark, tmp_path, buckets=4)
+    root = tb.root
+    tb.append_delta(
+        _delta_changes(spark, [("r1", "p1", "c0", "en", "v0", True, 10, 10, "I")]),
+        "d0", 10,
+    )
+    tb = LakeTable.load(spark, root)
+    v = tb.manifest["version"]
+    fold = tb.start_fold()
+    stats = tb.append_delta(
+        _delta_changes(spark, [("r2", "p2", "c1", "en", "w1", True, 20, 20, "I")]),
+        "d1", 20, fold=fold,
+    )
+    assert stats["snapshot_version"] == v + 1
+    assert stats["fold"]["folded_batches"] == ["d0"]
+    tb = LakeTable.load(spark, root)
+    assert [g["batch_key"] for g in tb.manifest["deltas"]] == ["d1"]
+    assert sorted(r["path"] for r in tb.read_public().collect()) == ["p1", "p2"]
+    assert tb.read(with_deltas=False).count() == 1  # p1 folded into base
+
+    # a fold with no delta to share its snapshot commits alone
+    fold = tb.start_fold()
+    assert tb.commit_fold(fold)["snapshot_version"] == v + 2
+    tb = LakeTable.load(spark, root)
+    assert tb.delta_count == 0
+    assert sorted(r["path"] for r in tb.read_public().collect()) == ["p1", "p2"]
+
+    # abandoned: nothing committed, the fold's data dir is an orphan
+    tb.append_delta(
+        _delta_changes(spark, [("r3", "p3", "c2", "en", "x2", True, 30, 30, "I")]),
+        "d2", 30,
+    )
+    tb = LakeTable.load(spark, root)
+    dirs = set(os.listdir(os.path.join(root, "data")))
+    tb.start_fold().abandon()
+    orphan = set(os.listdir(os.path.join(root, "data"))) - dirs
+    assert len(orphan) == 1 and "-fold-" in orphan.pop()
+    assert LakeTable.load(spark, root).delta_count == 1
+    tb.expire_snapshots(keep_last=1)
+    assert not [d for d in os.listdir(os.path.join(root, "data")) if d not in dirs]
+    assert sorted(
+        r["path"] for r in LakeTable.load(spark, root).read_public().collect()
+    ) == ["p1", "p2", "p3"]

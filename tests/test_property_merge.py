@@ -89,7 +89,7 @@ def _build_trace_rows(scripts: dict[int, list[str]]):
     n_epochs=st.integers(1, 4),
     order_seed=st.randoms(use_true_random=False),
 )
-@pytest.mark.parametrize("mode", ["merge", "delta", "mixed"])
+@pytest.mark.parametrize("mode", ["merge", "delta", "mixed", "delta_fold1"])
 def test_random_trace_out_of_order_epochs_match_oracle(
     spark, tmp_path_factory, mode, scripts, n_epochs, order_seed
 ):
@@ -125,14 +125,19 @@ def test_random_trace_out_of_order_epochs_match_oracle(
     root = str(tmp_path_factory.mktemp("prop") / "t")
     LakeTable.create(spark, root, ["repo", "path"], FIELDS, num_buckets=4)
     # mode: every epoch through the copy-on-write merge, every epoch as a
-    # merge-on-read delta commit (resolution at read), or alternating —
-    # the mixed case interleaves delta generations with full merges,
-    # which auto-fold pending deltas mid-history
+    # merge-on-read delta commit (resolution at read), alternating — the
+    # mixed case interleaves delta generations with full merges, which
+    # auto-fold pending deltas mid-history — or delta commits folding
+    # every pending generation on the next epoch (background fold
+    # committed with that epoch's delta)
     for j, i in enumerate(order):
         if not epochs[i]:
             continue
-        delta = mode == "delta" or (mode == "mixed" and j % 2 == 0)
-        cfg = PipelineConfig(num_buckets=4, delta_commits=delta)
+        delta = mode.startswith("delta") or (mode == "mixed" and j % 2 == 0)
+        cfg = PipelineConfig(
+            num_buckets=4, delta_commits=delta,
+            delta_fold_every=1 if mode == "delta_fold1" else 64,
+        )
         trace = spark.createDataFrame([rel_row] + epochs[i], TRACE_SCHEMA)
         tb = LakeTable.load(spark, root)
         pipeline.replay_batch(trace, tb, cfg, f"e{i}")

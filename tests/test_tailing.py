@@ -555,11 +555,11 @@ def test_drain_mode_refuses_assemble_checkpoint(spark, straddling_trace, tmp_pat
         )
 
 
-def test_live_tail_latency_soak(spark, tmp_path):
-    """Live tail (processingTime + marker TTL): files fed while the
-    query runs commit within bounded latency and converge to the oracle
-    state. Latency samples (file-landed -> snapshot-commit wall time)
-    must exist and be positive for every fed slice."""
+def _live_tail_feed(spark, tmp_path, cfg):
+    """Feed a raw-split trace slice by slice into a running live tail
+    (slices after the first are gated on the first commit landing);
+    returns (records, feed times, expected oracle state, lake root,
+    max trace LSN)."""
     import os
     import shutil
     import threading
@@ -615,9 +615,7 @@ def test_live_tail_latency_soak(spark, tmp_path):
     feeder.start()
     records = run_live_tail(
         spark, live_dir, root, str(tmp_path / "ckpt"),
-        # the advertised live-tail config: merge-on-read delta commits
-        # + latency-sized state width (final read resolves base ∪ deltas)
-        cfg=PipelineConfig(num_buckets=8, delta_commits=True),
+        cfg=cfg,
         processing_interval="200 milliseconds",
         marker_ttl_ms=10_000,
         until_lsn=max_lsn,
@@ -625,6 +623,20 @@ def test_live_tail_latency_soak(spark, tmp_path):
         state_partitions=4,
     )
     feeder.join(timeout=10)
+    return records, feed_times, expected, root, max_lsn
+
+
+def test_live_tail_latency_soak(spark, tmp_path):
+    """Live tail (processingTime + marker TTL): files fed while the
+    query runs commit within bounded latency and converge to the oracle
+    state. Latency samples (file-landed -> snapshot-commit wall time)
+    must exist and be positive for every fed slice."""
+    records, feed_times, expected, root, _ = _live_tail_feed(
+        spark, tmp_path,
+        # the advertised live-tail config: merge-on-read delta commits
+        # + latency-sized state width (final read resolves base ∪ deltas)
+        PipelineConfig(num_buckets=8, delta_commits=True),
+    )
     got = _final(spark, root)
     assert got == {k: e.get("content") for k, e in expected.items()}
     commits = [r for r in records if not r["stats"].get("noop")]
@@ -633,3 +645,27 @@ def test_live_tail_latency_soak(spark, tmp_path):
     t_last_feed = max(feed_times.values())
     t_last_commit = max(r["t_commit"] for r in commits)
     assert t_last_commit > t_last_feed
+
+
+def test_live_tail_fold_every_trigger_records_cover_until_lsn(spark, tmp_path):
+    """Live tail folding on every trigger (background fold committed in
+    the trigger's own snapshot): the query stops only once a RETURNED
+    record covers until_lsn, so the records' cumulative high_lsn reaches
+    it — no committed slice goes unrecorded — and the folded state
+    matches the oracle."""
+    records, _, expected, root, max_lsn = _live_tail_feed(
+        spark, tmp_path,
+        PipelineConfig(num_buckets=8, delta_commits=True, delta_fold_every=1),
+    )
+    high = max(
+        m.get("high_lsn") or -1
+        for r in records
+        for m in (r["stats"].get("tables") or {}).values()
+    )
+    assert high >= max_lsn
+    assert LakeTable.load(spark, root).last_applied_lsn == high
+    # later triggers folded the previous delta (with their own delta, or
+    # alone on a no-data trigger)
+    assert [e for e in LakeTable.load(spark, root).lineage() if e.get("fold")]
+    got = _final(spark, root)
+    assert got == {k: e.get("content") for k, e in expected.items()}

@@ -1,8 +1,8 @@
 """Pipeline configuration — the Spark analog of the reference's YAML
 config (``/root/reference/internal/config/config.go:20-80``,
 ``config_example.yml``): listener filter (table -> actions), publisher
-topic/prefix/topicsMap, plus Spark-side knobs (buckets, salt) the Go
-daemon never needed. ``load_config`` mirrors the viper loader
+topic/prefix/topicsMap, plus Spark-side knobs (lake layout, merge-on-read
+commits) the Go daemon never needed. ``load_config`` mirrors the viper loader
 (``config.go:96-117``): YAML file + ``WAL_``-prefixed environment
 overrides (dots in the config path become underscores, case-insensitive
 — ``WAL_PUBLISHER_TOPIC`` overrides ``publisher.topic``).
@@ -25,8 +25,6 @@ class PipelineConfig:
     topics_map: dict[str, str] = field(default_factory=dict)
     #: lake layout
     num_buckets: int = 32
-    #: skew salt for per-repo aggregations
-    salt_buckets: int = 32
     #: hot-key guard for the merge compaction: when set, compact_agg
     #: pre-aggregates on (keys, salt(lsn)) with map-side combine so a
     #: single key's update storm spreads across this many reducers
@@ -41,10 +39,15 @@ class PipelineConfig:
     #: merge-on-read commits (the LIVE-tail latency path): each epoch
     #: appends its compacted change set as a lake DELTA generation (one
     #: write + atomic manifest swap — no target read, no bucket rewrite)
-    #: and readers resolve base ∪ deltas; a fold absorbs deltas into the
-    #: bucketed base every ``delta_fold_every`` generations (and on any
-    #: truncate/maintenance/full merge). False = classic copy-on-write
-    #: merge per epoch (bounded replays, deep backlogs).
+    #: and readers resolve base ∪ deltas. Once ``delta_fold_every``
+    #: generations are pending, the next epoch folds them into the
+    #: bucketed base: the delta-touched buckets are rewritten from the
+    #: read path's one resolution aggregation, on a background thread
+    #: that overlaps the epoch's assembly and census, and the fold
+    #: commits in the same snapshot as the epoch's own delta (LakeCatalog
+    #: targets fold in line). Any truncate/maintenance/full merge folds
+    #: first. False = classic copy-on-write merge per epoch (bounded
+    #: replays, deep backlogs).
     delta_commits: bool = False
     delta_fold_every: int = 64
     #: upstream guarantees every batch carries only COMPLETE transactions
@@ -90,8 +93,8 @@ def load_config(
     - ``publisher.topic``        -> topic (required when a publisher
       section exists, mirroring the reference's valid:"required")
     - ``publisher.topicPrefix``  -> topic_prefix
-    - ``spark.numBuckets`` / ``spark.saltBuckets`` /
-      ``spark.selectiveBuckets`` -> lake/skew knobs (our extension)
+    - ``spark.numBuckets`` / ``spark.selectiveBuckets`` -> lake knobs
+      (our extension)
     """
     env = dict(os.environ) if env is None else env
     doc: dict = {}
@@ -129,9 +132,6 @@ def load_config(
     nb = _env_override(env, "spark", "numbuckets") or spark.get("numBuckets")
     if nb is not None:
         cfg.num_buckets = int(nb)
-    sb = _env_override(env, "spark", "saltbuckets") or spark.get("saltBuckets")
-    if sb is not None:
-        cfg.salt_buckets = int(sb)
     sel = _env_override(env, "spark", "selectivebuckets")
     if sel is None:
         sel = spark.get("selectiveBuckets")

@@ -289,7 +289,7 @@ class LakeTable:
         versions = self._base_as_versions(base).unionByName(
             self._read_delta_rows(buckets)
         )
-        return self._resolve_versions(versions, as_changes=False)
+        return self._resolve_versions(versions)
 
     def read_public(self) -> DataFrame:
         """Live rows only — delete tombstones filtered out. Tombstones
@@ -485,18 +485,7 @@ class LakeTable:
         )
         mark("merge:write")
 
-        # collect per-bucket files + row counts (lineage)
-        new_buckets: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith(f"{BUCKET_COL}="):
-                continue
-            b = entry.split("=", 1)[1]
-            files = [
-                f"{rel_dir}/{entry}/{fn}"
-                for fn in os.listdir(os.path.join(out_dir, entry))
-                if fn.endswith(".parquet")
-            ]
-            new_buckets[b] = files
+        new_buckets = self._written_buckets(rel_dir)
 
         buckets = dict(self.manifest["buckets"])
         if truncate_lsn is not None:
@@ -538,21 +527,9 @@ class LakeTable:
         self.manifest["version"] = new_version
         self.manifest["buckets"] = buckets
         props = self.manifest["properties"]
-        props["last_applied_lsn"] = max(self.last_applied_lsn, high_lsn)
         if eff_trunc >= 0:
             props["truncate_lsn"] = eff_trunc
-        cb = dict(props.get("committed_batches", {}))
-        cb.pop(batch_key, None)  # re-insert at the end (most recent)
-        cb[batch_key] = high_lsn
-        if len(cb) > BATCH_KEY_RETENTION:
-            # prune by insertion recency, NOT by high_lsn: epochs arrive
-            # in arbitrary LSN order, and the no-op guard protects the
-            # foreachBatch redelivery frontier — the most RECENTLY
-            # committed keys. (dict / JSON object order is insertion
-            # order, preserved across manifest round-trips.)
-            keep = list(cb)[-BATCH_KEY_RETENTION:]
-            cb = {k: cb[k] for k in keep}
-        props["committed_batches"] = cb
+        self._record_batch(batch_key, high_lsn)
         if registry_json is not None:
             props["registry"] = registry_json
         self._commit_manifest()
@@ -565,15 +542,18 @@ class LakeTable:
     # appends its LWW-compacted change set as a DELTA generation — one
     # parquet write plus the atomic manifest swap, no target read, no
     # join, no bucket rewrite — and readers resolve base ∪ deltas on
-    # read. A periodic fold() absorbs the deltas into the bucketed base
-    # through the ordinary merge (selective: only delta-touched buckets
-    # rewrite). At 100 TB this is the only per-trigger cost model that
-    # holds: commit latency is O(trigger data), while the full
-    # copy-on-write merge is O(touched buckets) and belongs on the
-    # amortized fold cadence, not on every 250 ms trigger. Resolution is
-    # ONE aggregation whose column rules are the closed form of
-    # merge_batch's pairwise fold (proven equivalent for valid WAL
-    # histories by the delta-vs-merge property tests).
+    # read. Resolution is ONE aggregation whose column rules are the
+    # closed form of merge_batch's pairwise fold (proven equivalent for
+    # valid WAL histories by the delta-vs-merge property tests), and the
+    # fold is that same aggregation written back: fold_deltas() rewrites
+    # only the delta-touched buckets with exactly the rows readers
+    # already see (one bucket repartition, one file per bucket — no
+    # persist, no stats job, no join). At 100 TB this is the only
+    # per-trigger cost model that holds: commit latency is O(trigger
+    # data), while the bucket rewrite is O(touched buckets) and runs off
+    # the commit path — the live tail starts it on a background thread
+    # against a frozen manifest copy (start_fold) and commits it in the
+    # same snapshot as the trigger's own delta (append_delta(fold=...)).
 
     @property
     def delta_count(self) -> int:
@@ -595,15 +575,24 @@ class LakeTable:
         parts.append(f"`{BUCKET_COL}` bigint")
         return SparkTypes.StructType.fromDDL(", ".join(parts))
 
-    def _read_delta_rows(self, buckets: list[int] | None) -> DataFrame:
-        files = [
+    def _delta_files(self) -> list[str]:
+        return [
             os.path.join(self.root, f)
             for gen in self.manifest.get("deltas") or []
             for f in gen["files"]
         ]
+
+    def _read_delta_rows(self, buckets: list[int] | None) -> DataFrame:
+        """Pending delta rows, under the same truncate watermark the
+        merge applies to its change set: a late pre-truncate row must
+        not resurrect a key at read time that the fold would drop."""
+        files = self._delta_files()
         if not files:
             return self.spark.createDataFrame([], self._delta_read_schema())
         df = self.spark.read.schema(self._delta_read_schema()).parquet(*files)
+        trunc = self.properties.get("truncate_lsn", -1)
+        if trunc >= 0:
+            df = df.filter((F.col("lsn") > F.lit(trunc)) | (F.col("op") == "D"))
         if buckets is not None:
             df = df.filter(F.col(BUCKET_COL).isin([int(b) for b in buckets]))
         return df
@@ -639,10 +628,12 @@ class LakeTable:
         )
         return base.select(*cols)
 
-    def _resolve_versions(self, versions: DataFrame, as_changes: bool) -> DataFrame:
-        """ONE groupBy(key) collapsing a key's version rows (base row +
-        any delta rows) to its final state — the closed form of the
-        pairwise merge for valid WAL histories:
+    def _resolve_versions(
+        self, versions: DataFrame, with_bucket: bool = False
+    ) -> DataFrame:
+        """ONE groupBy(bucket, key) collapsing a key's version rows (base
+        row + any delta rows) to its final stored row — the closed form
+        of the pairwise merge for valid WAL histories:
 
         - row-level winner = max (lsn, seq); its op decides the
           tombstone;
@@ -652,8 +643,10 @@ class LakeTable:
         - per column the qualifying setter with the highest set-LSN wins
           (struct max — exact under re-aggregation, no ordering needed).
 
-        ``as_changes=False`` projects the stored-row shape (read path);
-        ``as_changes=True`` projects the merge-input shape (fold path).
+        The bucket is a function of the key, so grouping by it too
+        changes no group; it lets a bucket-partitioned input aggregate
+        without another exchange (the fold). ``with_bucket`` keeps the
+        bucket column in the output.
         """
         key_cols = self.key_cols
         value_cols = [
@@ -665,7 +658,6 @@ class LakeTable:
             F.coalesce(
                 F.max(F.when(F.col("op") == "D", F.col("lsn"))), F.lit(-1)
             ).alias("d_max"),
-            F.max(BUCKET_COL).alias(BUCKET_COL),
         ]
         for c in value_cols:
             aggs.append(
@@ -681,41 +673,28 @@ class LakeTable:
                     )
                 ).alias(f"__cand_{c}")
             )
-        agged = versions.groupBy(*key_cols).agg(*aggs)
+        agged = versions.groupBy(BUCKET_COL, *key_cols).agg(*aggs)
 
         deleted = F.col("win.op") == "D"
         out = [F.col(k) for k in key_cols]
+        setters = {}
         for c in value_cols:
             cand = F.col(f"__cand_{c}")
-            qual = cand.isNotNull() & (cand.getField("l") > F.col("d_max"))
-            val = F.when(~deleted & qual, cand.getField("v").getField("x"))
-            if as_changes:
-                out.append(val.alias(c))
-                out.append((~deleted & qual).alias(f"__set_{c}"))
-                out.append(
-                    F.when(~deleted & qual, cand.getField("l"))
-                    .cast("bigint")
-                    .alias(f"__setlsn_{c}")
-                )
-            else:
-                out.append(val.alias(c))
-        if as_changes:
-            out.append(F.col("win.lsn").alias("lsn"))
-            out.append(F.col("win.seq").alias("seq"))
-            out.append(F.col("win.op").alias("op"))
-            out.append(F.col(BUCKET_COL))
-            return agged.select(*out)
+            setters[c] = ~deleted & cand.isNotNull() & (
+                cand.getField("l") > F.col("d_max")
+            )
+            out.append(F.when(setters[c], cand.getField("v").getField("x")).alias(c))
         out.append(F.col("win.lsn").alias(LSN_COL))
         out.append(deleted.alias(DELETED_COL))
         for c in value_cols:
-            cand = F.col(f"__cand_{c}")
-            qual = cand.isNotNull() & (cand.getField("l") > F.col("d_max"))
             out.append(
-                F.when(~deleted & qual, cand.getField("l"))
+                F.when(setters[c], F.col(f"__cand_{c}").getField("l"))
                 .otherwise(F.lit(-1))
                 .cast("bigint")
                 .alias(f"{CLSN_PREFIX}{c}")
             )
+        if with_bucket:
+            out.append(F.col(BUCKET_COL))
         return agged.select(*out)
 
     def append_delta(
@@ -724,6 +703,7 @@ class LakeTable:
         batch_key: str,
         high_lsn: int,
         registry_json: list[dict] | None = None,
+        fold: "PendingFold | None" = None,
     ) -> dict:
         """Commit one micro-batch as a merge-on-read DELTA generation.
 
@@ -733,7 +713,13 @@ class LakeTable:
         to merge_batch: replayed epochs no-op on batch_key, overlapping
         LSN ranges resolve row/column-level at read or fold time. The
         write is the trigger's ONLY data job; the snapshot commit is the
-        same atomic manifest/VERSION swap (our LSN ack)."""
+        same atomic manifest/VERSION swap (our LSN ack).
+
+        ``fold``: a background fold (:meth:`start_fold`) to commit in the
+        SAME snapshot — the delta is written while the fold may still
+        run, then the fold is joined and both land in one manifest
+        version. A replayed epoch leaves the fold uncommitted (the
+        caller commits it alone)."""
         committed = self.properties.get("committed_batches", {})
         if batch_key in committed:
             return {"batch_key": batch_key, "noop": True, "reason": "replayed_epoch"}
@@ -773,6 +759,7 @@ class LakeTable:
             for fn in os.listdir(out_dir)
             if fn.endswith(".parquet")
         ]
+        fold_stats = self._take_fold(fold)
         deltas = list(self.manifest.get("deltas") or [])
         deltas.append({"files": files, "high_lsn": high_lsn, "batch_key": batch_key})
         stats = {
@@ -785,56 +772,149 @@ class LakeTable:
         }
         self.manifest["version"] = new_version
         self.manifest["deltas"] = deltas
-        props = self.manifest["properties"]
-        props["last_applied_lsn"] = max(self.last_applied_lsn, high_lsn)
-        cb = dict(props.get("committed_batches", {}))
-        cb.pop(batch_key, None)
-        cb[batch_key] = high_lsn
-        if len(cb) > BATCH_KEY_RETENTION:
-            keep = list(cb)[-BATCH_KEY_RETENTION:]
-            cb = {k: cb[k] for k in keep}
-        props["committed_batches"] = cb
+        self._record_batch(batch_key, high_lsn)
         if registry_json is not None:
-            props["registry"] = registry_json
+            self.properties["registry"] = registry_json
         self._commit_manifest()
-        self._append_lineage(stats)
+        if fold_stats is not None:
+            fold_stats["snapshot_version"] = new_version
+            self._append_lineage(fold_stats)
+            stats["fold"] = fold_stats
+        self._append_lineage({k: v for k, v in stats.items() if k != "fold"})
         return stats
 
-    def fold_deltas(self) -> dict | None:
-        """Absorb pending delta generations into the bucketed base: the
-        deltas alone resolve to one change row per key (same closed form
-        as the read path), then the ordinary selective merge rewrites
-        ONLY the delta-touched buckets. Crash-safe: until the fold's
-        snapshot commit lands, the previous manifest still lists the
-        deltas and a re-run recomputes the identical fold (delta files
-        are immutable snapshot data; duplicated work, never duplicated
-        state)."""
+    def fold_deltas(self, commit: bool = True) -> dict | None:
+        """Absorb pending delta generations into the bucketed base.
+
+        The delta-touched buckets are rewritten straight from the read
+        path's resolution (:meth:`_resolve_versions` over base ∪ deltas)
+        — the stored rows readers already see, ``__clsn_*`` included —
+        repartitioned once on the bucket and written one file per
+        bucket into a data dir no other writer uses. One Spark job: no
+        persist, no stats pre-pass, no join; the touched-bucket set and
+        the counters come from the delta files' ``lsn``/``op``/bucket
+        columns, read on the driver (deltas are O(trigger data)).
+        ``upserts``/``deletes`` count the delta change rows absorbed.
+
+        ``commit=False`` applies the fold to this object's manifest in
+        memory only — the background form (:class:`PendingFold`), whose
+        snapshot a later :meth:`append_delta` / :meth:`commit_fold`
+        splices in. Crash-safe either way: until a snapshot lists the
+        fold's files, the previous manifest still lists the deltas, and
+        the orphaned dir is reclaimed by :meth:`expire_snapshots`."""
         gens = self.manifest.get("deltas") or []
         if not gens:
             return None
-        changes = self._resolve_versions(
-            self._read_delta_rows(None), as_changes=True
-        )
-        high = max(g["high_lsn"] for g in gens)
-        self.manifest["deltas"] = []  # committed atomically with the fold
-        cleanup: list[DataFrame] = []
-        try:
-            return self._merge_batch_impl(
-                changes,
-                f"fold-v{self.manifest['version']}",
-                high,
-                None,
-                [
-                    f["name"] for f in self.manifest["schema"]
-                    if f["name"] not in set(self.key_cols)
-                ],
-                None,
-                True,
-                cleanup,
+        touched, n_rows, n_deletes = self._delta_census()
+        rel_dir = f"data/v{self.manifest['version']}-fold-{uuid.uuid4().hex[:8]}"
+        new_buckets: dict[str, list[str]] = {}
+        if touched:
+            versions = self._base_as_versions(
+                self.read(touched, with_deltas=False)
+            ).unionByName(self._read_delta_rows(None))
+            (
+                self._resolve_versions(
+                    versions.repartition(len(touched), F.col(BUCKET_COL)),
+                    with_bucket=True,
+                )
+                .write.partitionBy(BUCKET_COL)
+                .mode("overwrite")
+                .parquet(os.path.join(self.root, rel_dir))
             )
-        finally:
-            for df in cleanup:
-                df.unpersist()
+            new_buckets = self._written_buckets(rel_dir)
+        stats = {
+            "batch_key": f"fold-v{self.manifest['version']}",
+            "noop": False,
+            "fold": True,
+            "high_lsn": max(g["high_lsn"] for g in gens),
+            "upserts": n_rows - n_deletes,
+            "deletes": n_deletes,
+            "truncate_lsn": None,
+            "buckets_rewritten": sorted(int(b) for b in new_buckets),
+            "folded_batches": [g["batch_key"] for g in gens],
+        }
+        self._splice_fold(stats, new_buckets)
+        if commit:
+            self._commit_fold_alone(stats)
+        return stats
+
+    def _delta_census(self) -> tuple[list[int], int, int]:
+        """(touched buckets, change rows, delete rows) of the pending
+        deltas under the truncate watermark — the same filter
+        :meth:`_read_delta_rows` applies."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        files = self._delta_files()
+        if not files:
+            return [], 0, 0
+        t = pa.concat_tables(
+            pq.read_table(f, columns=["lsn", "op", BUCKET_COL]) for f in files
+        )
+        trunc = self.properties.get("truncate_lsn", -1)
+        if trunc >= 0:
+            t = t.filter(
+                pc.or_(pc.greater(t["lsn"], trunc), pc.equal(t["op"], "D"))
+            )
+        touched = sorted(int(b) for b in pc.unique(t[BUCKET_COL]).to_pylist())
+        n_deletes = pc.sum(pc.equal(t["op"], "D")).as_py() or 0
+        return touched, t.num_rows, n_deletes
+
+    def _splice_fold(self, stats: dict, new_buckets: dict[str, list[str]]) -> None:
+        """Apply a fold to this manifest: drop exactly the folded delta
+        generations (by batch_key — generations appended since the fold's
+        snapshot stay pending) and swap only the rewritten buckets."""
+        folded = set(stats["folded_batches"])
+        self.manifest["deltas"] = [
+            g for g in self.manifest.get("deltas") or []
+            if g["batch_key"] not in folded
+        ]
+        buckets = dict(self.manifest["buckets"])
+        for b in stats["buckets_rewritten"]:
+            buckets[str(b)] = new_buckets[str(b)]
+        self.manifest["buckets"] = buckets
+
+    def start_fold(self) -> "PendingFold | None":
+        """Start folding the pending deltas on a background thread,
+        against a deep copy of the current manifest. The caller stays
+        the only committer: it resolves the returned fold through
+        :meth:`append_delta` (same snapshot), :meth:`commit_fold` (own
+        snapshot) or :meth:`PendingFold.abandon` (on error)."""
+        if not self.manifest.get("deltas"):
+            return None
+        return PendingFold(self)
+
+    def _take_fold(self, fold: "PendingFold | None") -> dict | None:
+        """Join ``fold`` and splice its output into this manifest (the
+        caller commits). The fold read only generations this manifest
+        still lists — nothing but this thread commits in between. A
+        column added since the fold's snapshot is absent from its files
+        and reads NULL with the row-LSN set-LSN fallback; harmless, as
+        every row in them was typed before that column existed, so any
+        valid set of it carries a higher LSN."""
+        if fold is None:
+            return None
+        stats = fold.result()
+        fold.resolved = True
+        if stats is not None:
+            self._splice_fold(stats, fold.table.manifest["buckets"])
+        return stats
+
+    def commit_fold(self, fold: "PendingFold | None") -> dict | None:
+        """Commit a background fold in its own snapshot (epochs with no
+        delta to share it: truncates and full merges commit it before
+        merge_batch, empty and replayed epochs commit it alone)."""
+        stats = self._take_fold(fold)
+        if stats is not None:
+            self._commit_fold_alone(stats)
+        return stats
+
+    def _commit_fold_alone(self, stats: dict) -> None:
+        self.manifest["version"] += 1
+        stats["snapshot_version"] = self.manifest["version"]
+        self._commit_manifest()
+        self._append_lineage(stats)
 
     def commit_external_buckets(
         self,
@@ -869,15 +949,7 @@ class LakeTable:
         }
         self.manifest["version"] = new_version
         self.manifest["buckets"] = buckets
-        props = self.manifest["properties"]
-        props["last_applied_lsn"] = max(self.last_applied_lsn, high_lsn)
-        cb = dict(props.get("committed_batches", {}))
-        cb.pop(batch_key, None)
-        cb[batch_key] = high_lsn
-        if len(cb) > BATCH_KEY_RETENTION:
-            keep = list(cb)[-BATCH_KEY_RETENTION:]
-            cb = {k: cb[k] for k in keep}
-        props["committed_batches"] = cb
+        self._record_batch(batch_key, high_lsn)
         self._commit_manifest()
         self._append_lineage(stats)
         return stats
@@ -912,15 +984,7 @@ class LakeTable:
             .mode("overwrite")
             .parquet(out_dir)
         )
-        new_buckets: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if entry.startswith(f"{BUCKET_COL}="):
-                b = entry.split("=", 1)[1]
-                new_buckets[b] = [
-                    f"{rel_dir}/{entry}/{fn}"
-                    for fn in os.listdir(os.path.join(out_dir, entry))
-                    if fn.endswith(".parquet")
-                ]
+        new_buckets = self._written_buckets(rel_dir)
         self.manifest["version"] = new_version
         self.manifest["buckets"] = new_buckets
         stats = {
@@ -978,6 +1042,38 @@ class LakeTable:
             "removed_data_dirs": removed_dirs,
         }
 
+    # ------------------------------------------------------- bookkeeping
+    def _written_buckets(self, rel_dir: str) -> dict[str, list[str]]:
+        """Root-relative parquet files per bucket of a dataset written
+        ``partitionBy(BUCKET_COL)`` under ``rel_dir``."""
+        out_dir = os.path.join(self.root, rel_dir)
+        return {
+            entry.split("=", 1)[1]: [
+                f"{rel_dir}/{entry}/{fn}"
+                for fn in os.listdir(os.path.join(out_dir, entry))
+                if fn.endswith(".parquet")
+            ]
+            for entry in os.listdir(out_dir)
+            if entry.startswith(f"{BUCKET_COL}=")
+        }
+
+    def _record_batch(self, batch_key: str, high_lsn: int) -> None:
+        """Advance the LSN watermark and (re-)insert ``batch_key`` at the
+        end of the committed-batch ring. Pruning is by insertion recency,
+        NOT by high_lsn: epochs arrive in arbitrary LSN order, and the
+        no-op guard protects the foreachBatch redelivery frontier — the
+        most RECENTLY committed keys. (dict / JSON object order is
+        insertion order, preserved across manifest round-trips.)"""
+        props = self.properties
+        props["last_applied_lsn"] = max(self.last_applied_lsn, high_lsn)
+        cb = dict(props.get("committed_batches", {}))
+        cb.pop(batch_key, None)
+        cb[batch_key] = high_lsn
+        if len(cb) > BATCH_KEY_RETENTION:
+            keep = list(cb)[-BATCH_KEY_RETENTION:]
+            cb = {k: cb[k] for k in keep}
+        props["committed_batches"] = cb
+
     # ------------------------------------------------------------- lineage
     def _append_lineage(self, stats: dict) -> None:
         """Per-commit lineage rolls to an append-only side file (one JSON
@@ -1020,3 +1116,44 @@ class LakeTable:
     def save_properties(self) -> None:
         self.manifest["version"] += 1
         self._commit_manifest()
+
+
+class PendingFold:
+    """A :meth:`LakeTable.fold_deltas` running on a background thread
+    against a deep copy of the manifest taken at submit time, so the
+    submitting thread can keep mutating (and committing) its own table.
+    The thread is a ``pyspark.InheritableThread``: it inherits the
+    submitter's job group, so stopping a streaming query cancels the
+    fold's Spark jobs with the trigger's."""
+
+    def __init__(self, table: LakeTable):
+        import copy
+
+        from pyspark import InheritableThread
+
+        self.table = LakeTable(table.spark, table.root, copy.deepcopy(table.manifest))
+        #: set once the fold is committed or abandoned
+        self.resolved = False
+        self._out: dict = {}
+        self._thread = InheritableThread(target=self._run, daemon=True)
+        self._thread.start()
+
+    def _run(self) -> None:
+        try:
+            self._out["stats"] = self.table.fold_deltas(commit=False)
+        except BaseException as e:  # re-raised on the committing thread
+            self._out["error"] = e
+
+    def result(self) -> dict | None:
+        """Wait for the fold; its stats, or its error re-raised."""
+        self._thread.join()
+        if "error" in self._out:
+            raise self._out["error"]
+        return self._out.get("stats")
+
+    def abandon(self) -> None:
+        """Error path: wait for the thread and drop its output. The data
+        dir it wrote stays an orphan no snapshot references, which
+        :meth:`LakeTable.expire_snapshots` reclaims."""
+        self._thread.join()
+        self.resolved = True

@@ -16,9 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
-from .lake.table import LakeTable
+from .lake.table import LakeTable, PendingFold
 from .operators import apply as apply_op
-from .operators.assemble import assemble_flagged  # noqa: F401 (events path)
 from .operators.filters import allowlist_filter
 from .operators.registry import RelationRegistry, RelationSchema, typed_changes
 
@@ -140,7 +139,43 @@ def replay_batch(
     overlapping or out-of-order LSN ranges — micro-batches may arrive in
     any order (file listing makes no ordering promise) and the state
     still converges to the sequential result.
+
+    Merge-on-read targets (``cfg.delta_commits``) take the delta fold off
+    the commit path: when a fold is due on a bare LakeTable it starts on
+    a background thread BEFORE the census (it reads only committed
+    deltas, so it overlaps the assembler and census), and every exit
+    resolves it — a data epoch commits it in the same snapshot as its
+    delta, a truncate / full-merge epoch commits it before merge_batch,
+    an empty or replayed epoch commits it alone, an error abandons it.
+    LakeCatalog targets fold in line.
     """
+    from .lake.catalog import LakeCatalog
+
+    fold = None
+    if (
+        cfg.delta_commits
+        and not isinstance(table, LakeCatalog)
+        and table.delta_count >= cfg.delta_fold_every
+    ):
+        fold = table.start_fold()
+    try:
+        stats = _replay_batch(trace, table, cfg, batch_key, fold)
+    except BaseException:
+        if fold is not None:
+            fold.abandon()
+        raise
+    if fold is not None and not fold.resolved:
+        table.commit_fold(fold)
+    return stats
+
+
+def _replay_batch(
+    trace: DataFrame,
+    table: "LakeTable | LakeCatalog",
+    cfg: PipelineConfig,
+    batch_key: str,
+    fold: "PendingFold | None",
+) -> dict:
     from .lake.catalog import LakeCatalog
 
     mark = _phase_timer()
@@ -438,16 +473,21 @@ def replay_batch(
         if use_delta:
             # merge-on-read commit (live-tail latency path): append the
             # compacted set as a delta generation — the epoch's only
-            # data job — and fold on cadence. Truncate-carrying epochs
-            # fall through to the full merge (which folds first).
-            if rel_table.delta_count >= cfg.delta_fold_every:
+            # data job — committing the background fold in the same
+            # snapshot (catalog tables fold in line, on cadence).
+            # Truncate-carrying epochs fall through to the full merge
+            # (which folds first).
+            if fold is None and rel_table.delta_count >= cfg.delta_fold_every:
                 rel_table.fold_deltas()
             return schema.qualified_name, rel_table.append_delta(
                 merge_input,
                 batch_key=f"{batch_key}:{schema.qualified_name}",
                 high_lsn=high_lsn,
                 registry_json=None if is_catalog else registry.to_json(),
+                fold=fold,
             )
+        if fold is not None:
+            rel_table.commit_fold(fold)
         mstats = rel_table.merge_batch(
             merge_input,
             batch_key=f"{batch_key}:{schema.qualified_name}",

@@ -566,12 +566,12 @@ def run_live_tail(
 ) -> list[dict]:
     """LIVE tail: processingTime micro-triggers + marker TTL, merging
     every trigger (latency over throughput — the processingTime twin of
-    ``run_tailing_stream``'s availableNow drain). Runs until the lake's
-    applied-LSN watermark reaches ``until_lsn`` (or ``timeout_s``), so a
+    ``run_tailing_stream``'s availableNow drain). Runs until a returned
+    record's ``high_lsn`` reaches ``until_lsn`` (or ``timeout_s``), so a
     caller feeding files concurrently can measure event-to-commit
-    latency: each returned record carries the wall-clock time its
-    snapshot commit finished plus the replay stats (``high_lsn`` inside
-    per-table stats). The reference's analog loop is
+    latency for every slice: each returned record carries the wall-clock
+    time its snapshot commit finished plus the replay stats
+    (``high_lsn`` inside per-table stats). The reference's analog loop is
     listener.go:388-436 — publish then ack, here merge then snapshot.
 
     ``state_partitions``: width of the stateful shuffle, baked into the
@@ -591,6 +591,11 @@ def run_live_tail(
 
     _pin_tx_buckets(checkpoint_dir, tx_buckets, mode="assemble")
     seed_registry(spark, trace_dir, table_root)
+    # a resumed tail whose lake already covers until_lsn has nothing left
+    # to return a record for
+    applied_at_start = getattr(
+        load_target(spark, table_root), "last_applied_lsn", -1
+    )
 
     def _apply(batch_df, batch_id: int) -> None:
         batch_df = batch_df.persist()
@@ -633,16 +638,31 @@ def run_live_tail(
         while _time.time() - t0 < timeout_s:
             if query.exception() is not None:
                 raise query.exception()
-            if until_lsn is not None:
-                applied = getattr(
-                    load_target(spark, table_root), "last_applied_lsn", None
-                )
-                if applied is not None and applied >= until_lsn:
-                    break
+            # stop on a RETURNED record, never on the manifest alone: a
+            # trigger's snapshot commit lands before its record does, and
+            # a stop in between would interrupt the trigger and drop the
+            # record of slices that did commit
+            if until_lsn is not None and (
+                applied_at_start >= until_lsn
+                or _records_high_lsn(records) >= until_lsn
+            ):
+                break
             _time.sleep(0.2)
     finally:
         query.stop()
     return records
+
+
+def _records_high_lsn(records: list[dict]) -> int:
+    """Highest LSN any returned live-tail record committed (-1: none)."""
+    return max(
+        (
+            m.get("high_lsn") or -1
+            for r in list(records)
+            for m in (r["stats"].get("tables") or {}).values()
+        ),
+        default=-1,
+    )
 
 
 def _staged_batch_dirs(staging_dir: str) -> list[str]:
