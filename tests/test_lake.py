@@ -315,8 +315,8 @@ def test_failed_merge_does_not_leak_cache(spark, tmp_path):
 
 
 def _delta_changes(spark, rows):
-    """Merge-input shape incl. set markers, as both compaction paths
-    emit: rows = (repo, path, commit, lang, content, set_content,
+    """Merge-input shape incl. set markers, as ``compact_agg``
+    emits it: rows = (repo, path, commit, lang, content, set_content,
     setlsn_content, lsn, op). Unlisted value cols are set at the row
     lsn (commit/lang always sent; content may TOAST-skip)."""
     out = []

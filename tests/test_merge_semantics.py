@@ -9,13 +9,10 @@
    duplicates keys.
 
 Both run the full replay_batch path across TWO epochs so the merge (not
-just batch-local compaction) is exercised, under both compaction paths
-(agg default and WAL_COMPACT=window).
+just batch-local compaction with ``compact_agg``) is exercised.
 """
 
 import datetime
-
-import pytest
 
 from wal_listener_spark import pipeline
 from wal_listener_spark.config import PipelineConfig
@@ -53,13 +50,8 @@ def _replay(spark, root, rows, key_cols, fields, batch_key):
     return stats
 
 
-@pytest.mark.parametrize("compact_mode", ["agg", "window"])
-def test_update_to_explicit_null_crosses_epochs(spark, tmp_path, compact_mode, monkeypatch):
-    if compact_mode == "window":
-        monkeypatch.setenv("WAL_COMPACT", "window")
-    else:
-        monkeypatch.delenv("WAL_COMPACT", raising=False)
-    root = str(tmp_path / f"t_{compact_mode}")
+def test_update_to_explicit_null_crosses_epochs(spark, tmp_path):
+    root = str(tmp_path / "t")
     fields = [("k", "string"), ("content", "string"), ("note", "string")]
 
     # epoch 1: INSERT sets both value columns
@@ -88,17 +80,12 @@ def test_update_to_explicit_null_crosses_epochs(spark, tmp_path, compact_mode, m
     assert row["note"] == "n1", "TOAST 'u' column must keep the target value"
 
 
-@pytest.mark.parametrize("compact_mode", ["agg", "window"])
-def test_int_and_uuid_keys_bucket_consistently(spark, tmp_path, compact_mode, monkeypatch):
+def test_int_and_uuid_keys_bucket_consistently(spark, tmp_path):
     """Two epochs upserting the SAME int+uuid key must merge, not
     duplicate (change-side bucket hashed over typed/cast values)."""
-    if compact_mode == "window":
-        monkeypatch.setenv("WAL_COMPACT", "window")
-    else:
-        monkeypatch.delenv("WAL_COMPACT", raising=False)
     rel = [("id", 23, True), ("uid", 2950, True), ("content", 25, False)]
     fields = [("id", "int"), ("uid", "string"), ("content", "string")]
-    root = str(tmp_path / f"t_{compact_mode}")
+    root = str(tmp_path / "t")
 
     uid_mixed = "ABCDEF12-3456-7890-ABCD-EF1234567890"  # upper on the wire
     rows1 = [_rel(1, 1, "items", rel)]
@@ -122,18 +109,13 @@ def test_int_and_uuid_keys_bucket_consistently(spark, tmp_path, compact_mode, mo
     assert all(r["uid"] == uid_mixed.lower() for r in got)
 
 
-@pytest.mark.parametrize("compact_mode", ["agg", "window"])
-def test_toast_epoch_applied_before_its_setter(spark, tmp_path, compact_mode, monkeypatch):
+def test_toast_epoch_applied_before_its_setter(spark, tmp_path):
     """Out-of-order epochs + TOAST: the LATER epoch (whose UPDATE
     TOAST-skips `content`) applies FIRST; when the earlier epoch (the
     INSERT that set content) arrives, column-level LWW must keep the
     newer note AND fill in the older content — pure row-level LWW would
     discard it forever."""
-    if compact_mode == "window":
-        monkeypatch.setenv("WAL_COMPACT", "window")
-    else:
-        monkeypatch.delenv("WAL_COMPACT", raising=False)
-    root = str(tmp_path / f"t_{compact_mode}")
+    root = str(tmp_path / "t")
     fields = [("k", "string"), ("content", "string"), ("note", "string")]
     LakeTable.create(spark, root, ["k"], fields, num_buckets=4)
     cfg = PipelineConfig(num_buckets=4)
@@ -164,10 +146,9 @@ def test_toast_epoch_applied_before_its_setter(spark, tmp_path, compact_mode, mo
     )
 
 
-def test_losing_delete_does_not_clear_newer_row(spark, tmp_path, monkeypatch):
+def test_losing_delete_does_not_clear_newer_row(spark, tmp_path):
     """A DELETE from an older epoch arriving after a newer re-INSERT must
     not clear columns or resurrect the tombstone."""
-    monkeypatch.delenv("WAL_COMPACT", raising=False)
     root = str(tmp_path / "t")
     fields = [("k", "string"), ("content", "string"), ("note", "string")]
     LakeTable.create(spark, root, ["k"], fields, num_buckets=4)

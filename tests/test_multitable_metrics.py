@@ -329,6 +329,53 @@ def test_tailing_into_catalog_routes_multi_relation(spark, tmp_path):
     assert meta == {f"m{i}": f"o{i}" for i in range(1, 12, 2)}
 
 
+def _grouped_epoch2(spark, trace, live, nb):
+    """A second epoch over a populated target, touching only lake buckets
+    0 and 1: every third live key there gets an UPDATE (commit and
+    content set, lang TOASTed), the next one a DELETE. tx_id stays the
+    key index, so reshard_relations routes each change to the relation
+    that owns the key. Returns (rows, updated {key: k}, deleted {key: k})."""
+    from pyspark.sql import functions as F
+
+    from wal_listener_spark.lake.table import _bucket_expr
+    from wal_listener_spark.trace import spec
+
+    keyed = (
+        trace.filter(F.col("op") == "I")
+        .select(
+            "tx_id",
+            F.col("new_vals")["repo"].alias("repo"),
+            F.col("new_vals")["path"].alias("path"),
+        )
+        .dropDuplicates(["tx_id"])
+        .withColumn("b", _bucket_expr(["repo", "path"], nb))
+        .collect()
+    )
+    picked = sorted(
+        (r["tx_id"], (r["repo"], r["path"]))
+        for r in keyed
+        if r["b"] in (0, 1) and (r["repo"], r["path"]) in live
+    )
+    updated = {key: k for i, (k, key) in enumerate(picked) if i % 3 == 0}
+    deleted = {key: k for i, (k, key) in enumerate(picked) if i % 3 == 1}
+    ts = datetime.datetime(2024, 2, 1)
+    lsn = trace.agg(F.max("lsn")).collect()[0][0] + 10
+    rows = []
+    for key, k in sorted(list(updated.items()) + list(deleted.items())):
+        kv = {"repo": key[0], "path": key[1]}
+        if key in updated:
+            op, new, toast = "U", {**kv, "commit": f"e2c{k}", "content": f"e2-{k}"}, ["lang"]
+        else:
+            op, new, toast = "D", None, []
+        rows.append((lsn, k, -1, "B", None, None, None, None, None, None, None, ts, None))
+        rows.append(
+            (lsn + 1, k, 0, op, spec.REL_ID, None, None, None, kv, new, toast, None, None)
+        )
+        rows.append((lsn + 2, k, 99, "C", None, None, None, None, None, None, None, ts, None))
+        lsn += 10
+    return rows, updated, deleted
+
+
 def test_grouped_merge_matches_single_table_state(spark, tmp_path):
     """The catalog's grouped one-plan merge (>=3 same-schema relations:
     one compaction, one join, one partitioned write, N manifest commits)
@@ -336,40 +383,94 @@ def test_grouped_merge_matches_single_table_state(spark, tmp_path):
     same events — and a replayed epoch must no-op per table. Covers BOTH
     merge modes: selective_buckets=True (cached stats pre-pass) and
     False (wide mode: Observation counters riding the fused write job,
-    empty-union skip) — the two modes must also agree on the committed
-    upserts/deletes stats."""
+    empty-union skip), each over two epochs: a backfill into empty
+    tables, then a second epoch that changes a subset of keys in two of
+    the four buckets, merged into the populated targets (selective mode
+    must rewrite only those buckets and keep the rest). Per-table
+    upserts/deletes must equal the counts derived from the trace."""
+    from pyspark.sql import functions as F
+
     from wal_listener_spark.lake.catalog import LakeCatalog
     from wal_listener_spark.lake.table import LakeTable
     from wal_listener_spark.trace import generator
 
     SF = "/root/testdata/sf0.001"
+    NB = 4
     nk = generator.num_keys(spark, SF, 1)
     trace = generator.build_trace(spark, SF, amplify=1, k_evo=nk)
-    multi = generator.reshard_relations(trace, 4)
+    multi = generator.reshard_relations(trace, NB)
+
+    def _state(df):
+        return {
+            (r["repo"], r["path"]): (r["commit"], r["lang"], r["content"])
+            for r in df.collect()
+        }
 
     single_root = str(tmp_path / "single")
     LakeTable.create(
         spark, single_root, ["repo", "path"],
         [("repo", "string"), ("path", "string"), ("commit", "string"),
          ("lang", "string"), ("content", "string")],
-        num_buckets=4,
+        num_buckets=NB,
     )
     pipeline.replay_batch(
         trace, LakeTable.load(spark, single_root),
-        PipelineConfig(num_buckets=4), "s0",
+        PipelineConfig(num_buckets=NB), "s0",
     )
-    want = {
-        (r["repo"], r["path"]): (r["commit"], r["content"])
-        for r in LakeTable.load(spark, single_root).read_public().collect()
+    want = _state(LakeTable.load(spark, single_root).read_public())
+
+    e2_rows, updated, deleted = _grouped_epoch2(spark, trace, set(want), NB)
+    assert updated and deleted
+    e2 = spark.createDataFrame(e2_rows, TRACE_SCHEMA)
+    pipeline.replay_batch(
+        e2, LakeTable.load(spark, single_root),
+        PipelineConfig(num_buckets=NB), "s1",
+    )
+    want2 = _state(LakeTable.load(spark, single_root).read_public())
+    # the single-table oracle itself: updates land (lang kept across the
+    # TOAST cell), deletes drop, every other key is unchanged
+    assert want2 == {
+        key: (
+            (f"e2c{updated[key]}", v[1], f"e2-{updated[key]}")
+            if key in updated else v
+        )
+        for key, v in want.items()
+        if key not in deleted
     }
 
-    mode_stats: dict[bool, dict] = {}
+    # absolute per-table counters: backfill = one compacted row per key
+    # (a key whose last change is a DELETE counts as a delete), epoch 2 =
+    # the changed keys; table i owns the keys with k % NB == i
+    last_op = {
+        r["tx_id"]: r["w"]["op"]
+        for r in trace.filter(F.col("op").isin("I", "U", "D"))
+        .groupBy("tx_id")
+        .agg(F.max(F.struct("lsn", "op")).alias("w"))
+        .collect()
+    }
+
+    def _counts(ops: dict) -> dict:
+        out = {f"public_repos_{i}": [0, 0] for i in range(NB)}
+        for k, op in ops.items():
+            out[f"public_repos_{k % NB}"][op == "D"] += 1
+        return {name: tuple(c) for name, c in out.items()}
+
+    want_counts = {
+        "g0": _counts(last_op),
+        "g1": _counts(
+            {**{k: "U" for k in updated.values()},
+             **{k: "D" for k in deleted.values()}}
+        ),
+    }
+    e2_multi = generator.reshard_relations(e2, NB)
+    touched = {f"public_repos_{k % NB}" for k in (*updated.values(), *deleted.values())}
+
     for mode in (True, False):
         root = str(tmp_path / f"cat_sel_{mode}")
-        cat = LakeCatalog.create(spark, root, num_buckets=4)
-        cfg = PipelineConfig(num_buckets=4, selective_buckets=mode)
+        cat = LakeCatalog.create(spark, root, num_buckets=NB)
+        cfg = PipelineConfig(num_buckets=NB, selective_buckets=mode)
         stats = pipeline.replay_batch(multi, cat, cfg, "g0")
-        assert len(stats["tables"]) == 4
+        assert len(stats["tables"]) == NB
         assert all(m.get("grouped") for m in stats["tables"].values()), stats
 
         # replayed epoch: every table no-ops on its batch key
@@ -378,16 +479,24 @@ def test_grouped_merge_matches_single_table_state(spark, tmp_path):
         assert all(m.get("noop") for m in stats2["tables"].values())
 
         cat = LakeCatalog.load(spark, root)
-        got = {
-            (r["repo"], r["path"]): (r["commit"], r["content"])
-            for r in cat.read_public().drop("__table").collect()
-        }
-        assert got == want, f"selective_buckets={mode}"
-        mode_stats[mode] = {
-            name: (m["upserts"], m["deletes"])
-            for name, m in stats["tables"].items()
-        }
+        assert _state(cat.read_public().drop("__table")) == want, (
+            f"selective_buckets={mode}"
+        )
 
-    # the Observation-counter path must report the same per-table stats
-    # as the collected stats pre-pass
-    assert mode_stats[True] == mode_stats[False], mode_stats
+        # second epoch into the populated targets
+        stats3 = pipeline.replay_batch(e2_multi, cat, cfg, "g1")
+        assert all(m.get("grouped") for m in stats3["tables"].values()), stats3
+        cat = LakeCatalog.load(spark, root)
+        assert _state(cat.read_public().drop("__table")) == want2, (
+            f"selective_buckets={mode}, epoch 2"
+        )
+        if mode:
+            for name in touched:
+                assert set(stats3["tables"][name]["buckets_rewritten"]) <= {0, 1}
+
+        for key, st in (("g0", stats), ("g1", stats3)):
+            got_counts = {
+                name: (m["upserts"], m["deletes"])
+                for name, m in st["tables"].items()
+            }
+            assert got_counts == want_counts[key], (key, mode, got_counts)

@@ -52,10 +52,7 @@ def test_column_pruning_reaches_scan(spark, trace_dir):
     assert "new_vals" not in rs and "old_vals" not in rs, rs
 
 
-def test_compaction_single_exchange_no_sort_shuffle_blowup(spark, trace_dir):
-    """The agg-based LWW compaction moves the payload through exactly ONE
-    exchange (the bucket repartition) — the one-shuffle merge property."""
-    from wal_listener_spark.operators import apply as apply_op
+def _compaction_input(spark, trace_dir):
     from wal_listener_spark.operators.registry import RelationRegistry
     from wal_listener_spark.pipeline import stamp_table_names
 
@@ -64,9 +61,46 @@ def test_compaction_single_exchange_no_sort_shuffle_blowup(spark, trace_dir):
     rel = stamp_table_names(
         tr.filter(F.col("op").isin("I", "U", "D", "T")), reg
     ).filter(F.col("rel_id") == 1)
-    chg = apply_op.compact_agg(rel, reg.relations[1], num_buckets=8)
+    return tr, rel, reg.relations[1]
+
+
+def test_compaction_single_exchange_no_sort_shuffle_blowup(spark, trace_dir):
+    """The agg-based LWW compaction moves the payload through exactly ONE
+    exchange (the bucket repartition) — the one-shuffle merge property."""
+    from wal_listener_spark.operators import apply as apply_op
+
+    _, rel, schema = _compaction_input(spark, trace_dir)
+    chg = apply_op.compact_agg(rel, schema, num_buckets=8)
     plan = _plan(chg)
     assert plan.count("Exchange") == 1, plan
+
+
+def test_compaction_branch_exchange_counts(spark, trace_dir):
+    """Exchange count of every other compact_agg shape the engine plans:
+    the storm special-case adds only the tiny storm-row exchange, the
+    salted two-phase form its phase-1 groupBy exchange, the grouped
+    multi-relation fan-in and the bucketless delta path one each."""
+    from wal_listener_spark.operators import apply as apply_op
+
+    tr, rel, schema = _compaction_input(spark, trace_dir)
+    storm_txs = [
+        r["tx_id"]
+        for r in tr.filter(F.col("op") == "U").select("tx_id").distinct()
+        .orderBy("tx_id").limit(3).collect()
+    ]
+    assert storm_txs
+    shapes = {
+        "storm": (dict(num_buckets=8, storm_txs=storm_txs), 2),
+        "pre_salt": (dict(num_buckets=8, pre_salt=8), 2),
+        "grouped": (
+            dict(num_buckets=8, extra_group_cols=["rel_id"], num_partitions=16),
+            1,
+        ),
+        "delta": (dict(num_buckets=None), 1),
+    }
+    for name, (kw, want) in shapes.items():
+        plan = _plan(apply_op.compact_agg(rel, schema, **kw))
+        assert plan.count("Exchange") == want, (name, plan)
 
 
 def test_merge_reuses_bucket_partitioning(spark, trace_dir, tmp_path):
@@ -87,42 +121,6 @@ def test_merge_reuses_bucket_partitioning(spark, trace_dir, tmp_path):
     # we only require the merge to have applied through the prebucketed
     # branch (bucket column was carried by the change set)
     assert stats["tables"]["public_repos"]["buckets_rewritten"]
-
-
-def test_window_path_job_count_matches_default(
-    spark, trace_dir, tmp_path, monkeypatch
-):
-    """WAL_COMPACT=window (the A/B window-sort knob) must not pay any
-    extra driver job per batch: its truncate barrier comes from the same
-    fused census the default agg path uses (pipeline.compact_for_merge
-    t_lsn passthrough), so the Spark job count per replay_batch is
-    identical in both modes."""
-    from wal_listener_spark.config import PipelineConfig
-    from wal_listener_spark.lake.table import LakeTable
-    from wal_listener_spark.pipeline import replay_batch
-
-    sc = spark.sparkContext
-
-    def _run(tag: str, window: bool) -> int:
-        if window:
-            monkeypatch.setenv("WAL_COMPACT", "window")
-        else:
-            monkeypatch.delenv("WAL_COMPACT", raising=False)
-        tb = LakeTable.create(
-            spark, str(tmp_path / tag), ["repo", "path"], FIELDS, num_buckets=8
-        )
-        tr = spark.read.schema(TRACE_SCHEMA).parquet(trace_dir)
-        sc.setJobGroup(tag, tag)
-        try:
-            stats = replay_batch(tr, tb, PipelineConfig(num_buckets=8), "b0")
-        finally:
-            sc.setJobGroup(None, None)
-        assert not stats["noop"]
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
-
-    n_default = _run("jobs_default", window=False)
-    n_window = _run("jobs_window", window=True)
-    assert n_window == n_default, (n_window, n_default)
 
 
 def test_wide_mode_merge_single_pass(spark, trace_dir, tmp_path):

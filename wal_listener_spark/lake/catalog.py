@@ -165,19 +165,6 @@ class LakeCatalog:
             _merge_out_cols,
         )
 
-        import os as _os
-        import sys as _sys
-        import time as _time
-
-        _t = {"t": _time.time()}
-
-        def _mark(label: str) -> None:
-            if _os.environ.get("WAL_TIMING"):
-                now = _time.time()
-                print(f"[wal-timing] group:{label}: {now - _t['t']:.2f}s",
-                      file=_sys.stderr, flush=True)
-                _t["t"] = now
-
         stats_out: dict[str, dict] = {}
         todo: list[tuple[int, object, LakeTable, str]] = []
         for rel_id, schema in group:
@@ -209,7 +196,6 @@ class LakeCatalog:
             # planned), so the compacted change set is cached and the
             # counters ride the same action
             chg = chg.persist()
-            _mark("prep")
             per_rel = {
                 r["rel_id"]: r
                 for r in chg.groupBy("rel_id").agg(
@@ -220,7 +206,6 @@ class LakeCatalog:
                     F.collect_set(BUCKET_COL).alias("bks"),
                 ).collect()
             }
-            _mark("stats_action")
         else:
             # wide mode (backfill/full replay): every bucket rewrites, so
             # nothing needs to be known before the write — per-relation
@@ -244,7 +229,6 @@ class LakeCatalog:
                     ).alias(f"nd_{rel_id}")
                 )
             chg = chg.observe(obs, *aggs)
-            _mark("prep")
         try:
             t_parts = []
             affected_by_rel: dict[int, list[int]] = {}
@@ -304,7 +288,6 @@ class LakeCatalog:
                 )
             )
 
-            _mark("plan")
             gen = _uuid.uuid4().hex[:10]
             shared_rel = f"shared/g{gen}"
             out_dir = os.path.join(self.root, shared_rel)
@@ -326,7 +309,6 @@ class LakeCatalog:
                 .parquet(out_dir)
             )
 
-            _mark("write")
             obs_row = dict(obs.get) if obs is not None else None
             for rel_id, schema, tb, bkey in todo:
                 rel_dir = os.path.join(out_dir, f"rel_id={rel_id}")
@@ -350,11 +332,13 @@ class LakeCatalog:
                     row = per_rel.get(rel_id) if per_rel is not None else None
                     n = row["n"] if row is not None else 0
                     nd = (row["nd"] or 0) if row is not None else 0
-                stats_out[schema.qualified_name] = tb.commit_external_buckets(
-                    bkey, high_lsn, new_buckets, affected_by_rel[rel_id],
-                    upserts=n - nd, deletes=nd,
-                )
-            _mark("commits")
+                stats_out[schema.qualified_name] = {
+                    **tb.commit_external_buckets(
+                        bkey, high_lsn, new_buckets, affected_by_rel[rel_id],
+                        upserts=n - nd, deletes=nd,
+                    ),
+                    "grouped": True,
+                }
         finally:
             if selective:
                 chg.unpersist()

@@ -331,7 +331,7 @@ class LakeTable:
         with columns = key cols + value cols + ``lsn`` + ``op``
         ('I'/'U' upsert, 'D' delete).
         ``coalesce_cols``: TOASTable columns. When the change set carries
-        ``__set_<col>`` markers (both compaction paths emit them), the
+        ``__set_<col>`` markers (``compact_agg`` emits them), the
         marker decides: set -> take the batch value even when it is an
         explicit SQL NULL; unset (TOAST 'u' all batch) -> keep the
         target. Without markers, NULL falls back to "unchanged"
@@ -394,9 +394,6 @@ class LakeTable:
         selective: bool,
         cleanup: list[DataFrame],
     ) -> dict:
-        from ..pipeline import _phase_timer
-
-        mark = _phase_timer()
         key_cols = self.key_cols
         value_cols = [f["name"] for f in self.manifest["schema"] if f["name"] not in key_cols]
         coalesce_cols = coalesce_cols or []
@@ -429,7 +426,6 @@ class LakeTable:
             n_changes = stats_row["n"]
             n_deletes = stats_row["nd"] or 0
             affected = list(stats_row["bks"])
-            mark("merge:stats_prepass")
         else:
             # wide batch (or truncate, which rewrites everything anyway):
             # no pre-pass — counters ride the write job
@@ -477,22 +473,11 @@ class LakeTable:
             result = result.repartition(max(len(affected), 1), F.col(BUCKET_COL))
         # prebucketed: join output is already bucket-partitioned — the
         # write's per-task dynamic partitioning needs no extra shuffle
-        mark("merge:plan")
         (
             result.write.partitionBy(BUCKET_COL)
             .mode("overwrite")
             .parquet(out_dir)
         )
-        mark("merge:write")
-
-        new_buckets = self._written_buckets(rel_dir)
-
-        buckets = dict(self.manifest["buckets"])
-        if truncate_lsn is not None:
-            buckets = {}
-        for b in affected:
-            buckets.pop(str(b), None)
-        buckets.update(new_buckets)
 
         if observation is not None:
             try:
@@ -513,29 +498,13 @@ class LakeTable:
                 ).collect()[0]
                 n_changes = row["n"]
                 n_deletes = row["nd"] or 0
-        stats = {
-            "batch_key": batch_key,
-            "noop": False,
-            "high_lsn": high_lsn,
-            "upserts": n_changes - n_deletes,
-            "deletes": n_deletes,
-            "truncate_lsn": truncate_lsn,
-            "buckets_rewritten": sorted(int(b) for b in new_buckets),
-            "snapshot_version": new_version,
-        }
-
-        self.manifest["version"] = new_version
-        self.manifest["buckets"] = buckets
-        props = self.manifest["properties"]
-        if eff_trunc >= 0:
-            props["truncate_lsn"] = eff_trunc
-        self._record_batch(batch_key, high_lsn)
-        if registry_json is not None:
-            props["registry"] = registry_json
-        self._commit_manifest()
-        self._append_lineage(stats)
-        mark("merge:commit")
-        return stats
+        # a truncate epoch's affected set is every bucket, so the swap
+        # drops every pre-truncate file
+        return self.commit_external_buckets(
+            batch_key, high_lsn, self._written_buckets(rel_dir), affected,
+            upserts=n_changes - n_deletes, deletes=n_deletes,
+            truncate_lsn=truncate_lsn, registry_json=registry_json,
+        )
 
     # ---------------------------------------------- merge-on-read deltas
     # The LIVE-tail commit path (Iceberg v2 / Flink CDC shape): a trigger
@@ -924,13 +893,16 @@ class LakeTable:
         affected: list[int],
         upserts: int,
         deletes: int,
+        truncate_lsn: int | None = None,
+        registry_json: list[dict] | None = None,
     ) -> dict:
-        """Commit a snapshot whose bucket files were written by an
-        external job (the catalog's grouped many-table merge writes ONE
-        partitioned dataset and each member table commits its slice via
-        root-relative paths). Manifest bookkeeping is identical to
-        merge_batch's tail: affected buckets swap to the new files,
-        batch_key joins the no-op ring, the LSN watermark advances."""
+        """Commit a copy-on-write snapshot whose bucket files are already
+        written: merge_batch's own output, or an external job's (the
+        catalog's grouped many-table merge writes ONE partitioned dataset
+        and each member table commits its slice via root-relative
+        paths). Affected buckets swap to the new files, the truncate
+        watermark and registry advance, batch_key joins the no-op ring
+        and the LSN watermark advances."""
         buckets = dict(self.manifest["buckets"])
         for b in affected:
             buckets.pop(str(b), None)
@@ -942,14 +914,18 @@ class LakeTable:
             "high_lsn": high_lsn,
             "upserts": upserts,
             "deletes": deletes,
-            "truncate_lsn": None,
+            "truncate_lsn": truncate_lsn,
             "buckets_rewritten": sorted(int(b) for b in new_buckets),
             "snapshot_version": new_version,
-            "grouped": True,
         }
         self.manifest["version"] = new_version
         self.manifest["buckets"] = buckets
+        props = self.properties
+        if truncate_lsn is not None:
+            props["truncate_lsn"] = max(props.get("truncate_lsn", -1), truncate_lsn)
         self._record_batch(batch_key, high_lsn)
+        if registry_json is not None:
+            props["registry"] = registry_json
         self._commit_manifest()
         self._append_lineage(stats)
         return stats

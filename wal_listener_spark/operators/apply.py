@@ -5,90 +5,31 @@ The reference never needs this operator — single-threaded consumption
 gives it total order for free (``listener.go:364-386``). Once the stream
 is a partitioned DataFrame, ordering matters only *within* a key
 (cross-key order is unobservable in final state — same argument the
-reference relies on for per-table topics, SURVEY.md §2.6). So:
+reference relies on for per-table topics, SURVEY.md §2.6). So
+``compact_agg`` — the one LWW kernel, used by the engine and by the
+operator-level queries alike — folds each key's changes with a struct
+max, no sort:
 
- - per (repo, path) window ordered by (lsn, seq): TOAST 'u' columns take
-   the last explicitly-sent value (carry-forward), the winning row is
-   row_number()==1 descending — one shuffle on the full key, uniform
-   under hot-*repo* skew because the hash includes path.
+ - the winning row is ``max(struct(lsn, seq, op))`` per key; per value
+   column, ``max(when(set, struct(lsn, seq, v)))`` carries forward the
+   last explicitly-sent value past TOAST 'u' cells. Partial maxes
+   re-max exactly (associative), so map-side combining, the storm
+   special-case and the salted two-phase form are all the same rule.
  - final DELETE drops the key (wal.go kind delete).
  - TRUNCATE is an LSN barrier: keys whose last change precedes the
    truncate are dropped (parser.go:212-225 fans truncate out per
    relation; valid WAL never interleaves a key across the barrier).
 
-The struct-wrapping trick below distinguishes "TOAST-unchanged" (skip in
-carry-forward) from an explicit SQL NULL (real value that must overwrite):
-explicit NULL is a non-null struct with a null field, TOAST is a null
-struct, and ``last(ignorenulls=True)`` skips only the latter.
+The set flag distinguishes "TOAST-unchanged" (skip in carry-forward)
+from an explicit SQL NULL (real value that must overwrite): explicit
+NULL is a non-null struct with a null ``v`` field, an unset cell is a
+null struct, and ``max`` skips only the latter.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def last_write_wins(
-    changes: DataFrame,
-    key_cols: list[str],
-    value_cols: list[str],
-    toastable_cols: list[str] | None = None,
-    lsn_col: str = "lsn",
-    seq_col: str = "seq",
-    emit_set_markers: bool = False,
-    extra_partition_cols: list[str] | None = None,
-) -> DataFrame:
-    """Compact a change set to one final row per key.
-
-    Input rows: op in (I,U,D) with typed columns + ``toast_cols`` array.
-    Output: surviving rows (op != D at the end), one per key, with
-    ``lsn``/``seq``/``commit_ts`` of the winning change.
-
-    ``emit_set_markers``: additionally emit ``__set_<col>`` booleans —
-    True iff some row in the batch *explicitly set* the column (a 't' or
-    'n' cell; TOAST 'u' does not set). The cross-epoch MERGE needs the
-    marker to tell an explicit UPDATE-to-NULL apart from TOAST-unchanged
-    (both surface as NULL in the compacted value).
-    """
-    toastable = toastable_cols if toastable_cols is not None else value_cols
-    # extra_partition_cols: functionally key-dependent columns (e.g. the
-    # lake bucket) prepended to the window partitioning — groups are
-    # identical, but an input already hash-partitioned on the extra
-    # column alone then satisfies the window's clustered distribution
-    # (subset rule), so the window runs without its own exchange
-    part_cols = list(extra_partition_cols or []) + list(key_cols)
-    w_fwd = (
-        Window.partitionBy(*part_cols)
-        .orderBy(F.col(lsn_col).asc(), F.col(seq_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    df = changes
-    has_toast_info = "toast_cols" in df.columns
-    for c in value_cols:
-        cell = F.struct(F.col(lsn_col).alias("l"), F.col(c).alias("v"))
-        if c in toastable and has_toast_info:
-            wrapped = F.when(
-                F.array_contains(F.col("toast_cols"), c) | (F.col("op") == "D"),
-                F.lit(None),
-            ).otherwise(cell)
-        else:
-            wrapped = F.when(F.col("op") == "D", F.lit(None)).otherwise(cell)
-        carried = F.last(wrapped, ignorenulls=True).over(w_fwd)
-        if emit_set_markers:
-            # markers first: the value overwrite below must not shadow
-            # the original column the wrapped expression reads
-            df = df.withColumn(f"__set_{c}", carried.isNotNull())
-            df = df.withColumn(f"__setlsn_{c}", carried.getField("l"))
-        df = df.withColumn(c, carried.getField("v"))
-
-    w_last = Window.partitionBy(*part_cols).orderBy(
-        F.col(lsn_col).desc(), F.col(seq_col).desc()
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w_last))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def _part_spec(extra: list, num_buckets: int, num_partitions: int | None):
@@ -110,10 +51,8 @@ def compact_agg(
     num_partitions: int | None = None,
     storm_txs: list[int] | None = None,
 ) -> DataFrame:
-    """Aggregation-based LWW compaction — the scale path.
-
-    Equivalent to ``last_write_wins`` + typed projection, but built on
-    hash aggregation instead of a window sort:
+    """Aggregation-based LWW compaction, built on hash aggregation
+    instead of a window sort:
 
     ONE groupBy (repo, path) with map-side partial aggregation picks, per
     key, the winning (lsn, seq, op) AND, per column, the payload of the
@@ -125,8 +64,8 @@ def compact_agg(
 
     On a 10^10-event replay the partial agg collapses each key's version
     chain inside the map task, so the shuffle carries ~one row per key,
-    not one per version. Output: typed key+value columns, lsn, op —
-    identical contract to the window path (verified by the oracle tests).
+    not one per version. Output: typed key+value columns, lsn, seq, op,
+    delete winners included (the merge needs them to delete target rows).
 
     With ``num_buckets`` set, the frame is repartitioned ONCE on the lake
     bucket (pmod(xxhash64(keys), B)) and every downstream step — the
@@ -155,22 +94,23 @@ def compact_agg(
     key_cols = schema.key_columns
     value_cols = schema.value_columns
 
-    aggs = [
-        F.max(F.struct(F.col("lsn"), F.col("seq"), F.col("op"))).alias("win")
-    ]
-    for c in value_cols:
-        aggs.append(
-            F.max(
-                F.when(
-                    F.col(f"__s_{c}"),
-                    F.struct(
-                        F.col("lsn"),
-                        F.col("seq"),
-                        F.col(f"__v_{c}").alias("v"),
-                    ),
-                )
-            ).alias(f"__last_{c}")
+    # the winner and per-column candidate structs: every branch below
+    # aggregates (or, for the storm's uniform rows, projects) exactly
+    # these; the two-phase branches re-max the partials by name
+    win = F.struct(F.col("lsn"), F.col("seq"), F.col("op"))
+    cands = {
+        c: F.when(
+            F.col(f"__s_{c}"),
+            F.struct(F.col("lsn"), F.col("seq"), F.col(f"__v_{c}").alias("v")),
         )
+        for c in value_cols
+    }
+    aggs = [F.max(win).alias("win")] + [
+        F.max(cands[c]).alias(f"__last_{c}") for c in value_cols
+    ]
+    remax = [F.max("win").alias("win")] + [
+        F.max(f"__last_{c}").alias(f"__last_{c}") for c in value_cols
+    ]
 
     # key OID casts happen BEFORE the bucket hash: the merge recomputes
     # target buckets from the *typed* stored columns, so hashing the raw
@@ -235,25 +175,10 @@ def compact_agg(
         )
         rest_partial = base.filter(~is_storm).select(
             *[F.col(c) for c in group_cols],
-            F.struct(F.col("lsn"), F.col("seq"), F.col("op")).alias("win"),
-            *[
-                F.when(
-                    F.col(f"__s_{c}"),
-                    F.struct(
-                        F.col("lsn"), F.col("seq"),
-                        F.col(f"__v_{c}").alias("v"),
-                    ),
-                ).alias(f"__last_{c}")
-                for c in value_cols
-            ],
+            win.alias("win"),
+            *[cands[c].alias(f"__last_{c}") for c in value_cols],
         )
-        p = rest_partial.unionByName(hot_partial)
-        reagg = [F.max("win").alias("win")] + [
-            F.max(f"__last_{c}").alias(f"__last_{c}") for c in value_cols
-        ]
-        if num_buckets is not None:
-            p = p.repartition(*_part_spec(extra, num_buckets, num_partitions))
-        agged = p.groupBy(*group_cols).agg(*reagg)
+        partial, final_aggs = rest_partial.unionByName(hot_partial), remax
     elif pre_salt:
         # Hot-(repo,path) update-storm guard. The default single-exchange
         # plan repartitions on the bucket BEFORE aggregating, so a key
@@ -270,17 +195,15 @@ def compact_agg(
         salted = base.withColumn(
             "__salt", F.pmod(F.hash(F.col("lsn")), F.lit(pre_salt))
         )
-        p1 = salted.groupBy(*group_cols, "__salt").agg(*aggs).drop("__salt")
-        reagg = [F.max("win").alias("win")] + [
-            F.max(f"__last_{c}").alias(f"__last_{c}") for c in value_cols
-        ]
-        if num_buckets is not None:
-            p1 = p1.repartition(*_part_spec(extra, num_buckets, num_partitions))
-        agged = p1.groupBy(*group_cols).agg(*reagg)
+        partial = salted.groupBy(*group_cols, "__salt").agg(*aggs).drop("__salt")
+        final_aggs = remax
     else:
-        if num_buckets is not None:
-            base = base.repartition(*_part_spec(extra, num_buckets, num_partitions))
-        agged = base.groupBy(*group_cols).agg(*aggs)
+        # plain path: the exchange carries the flat __s_*/__v_* cells and
+        # the single groupBy builds the structs after it
+        partial, final_aggs = base, aggs
+    if num_buckets is not None:
+        partial = partial.repartition(*_part_spec(extra, num_buckets, num_partitions))
+    agged = partial.groupBy(*group_cols).agg(*final_aggs)
 
     out_cols = [F.col(c) for c in extra]
     if num_buckets is not None:
@@ -314,76 +237,3 @@ def truncate_barrier_lsn(changes: DataFrame) -> int | None:
     """Highest TRUNCATE lsn in the change set (None if no truncate)."""
     row = changes.filter(F.col("op") == "T").agg(F.max("lsn").alias("l")).collect()[0]
     return row["l"]
-
-
-def final_state(
-    changes: DataFrame,
-    key_cols: list[str],
-    value_cols: list[str],
-    toastable_cols: list[str] | None = None,
-) -> DataFrame:
-    """Full batch-local apply: truncate barrier -> LWW -> drop deletes.
-
-    Aggregation-based since round 6: the window form (two sorts + six
-    window passes per batch) cost 27 s on the 4.2M-event bench where the
-    equivalent single-pass aggregation costs ~5 s (guide §1.2: fix the
-    distributed algorithm first). Semantics are byte-identical to
-    ``last_write_wins`` + drops (oracle-gated by cdc_lww_compaction /
-    cdc_truncate / cdc_filter_allowlist / cdc_replay_overlap_dedup):
-
-    - winner = max (lsn, seq) row; its op decides survival, its
-      non-value columns ride the same struct max;
-    - per value column, the last row that *set* it (TOAST 'u' and
-      deletes don't set; explicit NULL does) supplies the value —
-      ``max(when(set, struct(lsn, seq, v)))`` is exactly the window
-      path's ``last(wrapped, ignorenulls)`` at the winning row, because
-      row order and (lsn, seq) order coincide.
-    """
-    t_lsn = truncate_barrier_lsn(changes)
-    data = changes.filter(F.col("op").isin("I", "U", "D"))
-    toastable = set(toastable_cols if toastable_cols is not None else value_cols)
-    has_toast = "toast_cols" in data.columns
-    in_cols = list(data.columns)
-    drop = {"toast_cols", "op", "tx_id"}
-    # non-key, non-value columns (lsn, seq, commit_ts, ...) come from
-    # the winning row, exactly as the window path's surviving row does
-    carry = [
-        c for c in in_cols
-        if c not in key_cols and c not in value_cols and c not in drop
-    ]
-    aggs = [
-        F.max(
-            F.struct(
-                F.col("lsn"), F.col("seq"), F.col("op"),
-                *[F.col(c) for c in carry if c not in ("lsn", "seq")],
-            )
-        ).alias("__win")
-    ]
-    for c in value_cols:
-        if c in toastable and has_toast:
-            unset = F.array_contains(F.col("toast_cols"), c) | (F.col("op") == "D")
-        else:
-            unset = F.col("op") == "D"
-        aggs.append(
-            F.max(
-                F.when(
-                    ~F.coalesce(unset, F.lit(False)),
-                    F.struct(F.col("lsn"), F.col("seq"), F.col(c).alias("v")),
-                )
-            ).alias(f"__last_{c}")
-        )
-    agged = data.groupBy(*key_cols).agg(*aggs)
-    out = agged.filter(F.col("__win.op") != "D")
-    if t_lsn is not None:
-        out = out.filter(F.col("__win.lsn") > F.lit(t_lsn))
-    proj = []
-    for c in in_cols:
-        if c in drop:
-            continue
-        if c in key_cols:
-            proj.append(F.col(c))
-        elif c in value_cols:
-            proj.append(F.col(f"__last_{c}.v").alias(c))
-        else:
-            proj.append(F.col(f"__win.{c}").alias(c))
-    return out.select(*proj)

@@ -19,36 +19,13 @@ from .config import PipelineConfig
 from .lake.table import LakeTable, PendingFold
 from .operators import apply as apply_op
 from .operators.filters import allowlist_filter
-from .operators.registry import RelationRegistry, RelationSchema, typed_changes
+from .operators.registry import RelationRegistry
 
 
 #: above this relation count the stamped lookup becomes a broadcast
 #: join — a CASE chain of hundreds of branches blows up Catalyst
 #: analysis time O(relations) per column
 STAMP_BROADCAST_THRESHOLD = 16
-
-
-def _phase_timer():
-    """Env-gated phase timing (``WAL_TIMING=1``): stderr lines per
-    replay phase, for finding where non-compute wall seconds go (driver
-    scheduling gaps, stage tails). Zero cost when unset."""
-    import os
-    import sys
-    import time
-
-    if not os.environ.get("WAL_TIMING"):
-        return lambda label: None
-    state = {"t": time.time()}
-
-    def mark(label: str) -> None:
-        now = time.time()
-        print(
-            f"[wal-timing] {label}: {now - state['t']:.2f}s",
-            file=sys.stderr, flush=True,
-        )
-        state["t"] = now
-
-    return mark
 
 
 def stamp_table_names(df: DataFrame, registry: RelationRegistry) -> DataFrame:
@@ -73,48 +50,6 @@ def stamp_table_names(df: DataFrame, registry: RelationRegistry) -> DataFrame:
         sch = F.when(F.col("rel_id") == rel_id, F.lit(s.schema_name)).otherwise(sch)
         tbl = F.when(F.col("rel_id") == rel_id, F.lit(s.table_name)).otherwise(tbl)
     return df.withColumn("schema_name", sch).withColumn("table_name", tbl)
-
-
-#: sentinel for "caller did not precompute the truncate barrier"
-_UNSET = object()
-
-
-def compact_for_merge(
-    typed: DataFrame, schema: RelationSchema, t_lsn: "int | None | object" = _UNSET
-) -> tuple[DataFrame, int | None]:
-    """Batch-local LWW compaction keeping delete markers (the merge
-    needs them to delete target rows), plus the truncate barrier.
-
-    ``t_lsn``: pass the relation's truncate barrier when the caller
-    already knows it (replay_batch extracts it from the fused one-scan
-    census — running ``truncate_barrier_lsn`` here again would pay a
-    dedicated collect job per batch for information the census already
-    produced). Standalone callers omit it and pay the single scan."""
-    from .lake.table import BUCKET_COL
-
-    if t_lsn is _UNSET:
-        t_lsn = apply_op.truncate_barrier_lsn(typed)
-    data = typed.filter(F.col("op").isin("I", "U", "D"))
-    compacted = apply_op.last_write_wins(
-        data,
-        key_cols=schema.key_columns,
-        value_cols=schema.value_columns,
-        toastable_cols=schema.value_columns,
-        emit_set_markers=True,
-        # callers that pre-bucketed the typed frame get the windows
-        # partitioned by (bucket, keys) — same groups, but a
-        # bucket-aligned input then needs no window exchange
-        extra_partition_cols=(
-            [BUCKET_COL] if BUCKET_COL in typed.columns else None
-        ),
-    )
-    if t_lsn is not None:
-        # keys fully before the barrier are wiped by the merge's
-        # truncate handling; their change rows must not resurrect them
-        compacted = compacted.filter(
-            (F.col("lsn") > F.lit(t_lsn)) | (F.col("op") == "D")
-        )
-    return compacted, t_lsn
 
 
 def replay_batch(
@@ -178,7 +113,6 @@ def _replay_batch(
 ) -> dict:
     from .lake.catalog import LakeCatalog
 
-    mark = _phase_timer()
     is_catalog = isinstance(table, LakeCatalog)
     # NOTE: deliberately NOT persisting the batch. The columnar cache
     # build for map/array-typed rows costs more than the 2-3 extra
@@ -217,7 +151,6 @@ def _replay_batch(
             ctl = {"high_lsn": light["high_lsn"], "bad": [],
                    "truncs": [], "rels": [], "storm_cands": None,
                    "total_changes": None}
-            mark("census_light")
     if ctl is None:
         per_tx = trace.select("tx_id", "lsn", "op").groupBy("tx_id").agg(
             F.max("lsn").alias("hi_lsn"),
@@ -267,7 +200,6 @@ def _replay_batch(
             ).alias("rels"),
         )
         ctl = summary.crossJoin(ctrl_rows).collect()[0]
-        mark("census")
 
     registry = RelationRegistry.from_json(table.properties.get("registry"))
     registry.update_from_rows(ctl["rels"] or [])
@@ -353,8 +285,6 @@ def _replay_batch(
             "LakeCatalog (lake/catalog.py) instead"
         )
 
-    import os as _os
-
     items = sorted(registry.relations.items())
 
     # Multi-relation fan-in: merging per relation pays one full payload
@@ -369,12 +299,7 @@ def _replay_batch(
     # (LakeCatalog.merge_group). Per-epoch driver cost becomes
     # independent of the table count.
     grouped_ids: set[int] = set()
-    if (
-        is_catalog
-        and len(items) > 2
-        and not cfg.delta_commits
-        and _os.environ.get("WAL_COMPACT") != "window"
-    ):
+    if is_catalog and len(items) > 2 and not cfg.delta_commits:
         by_sig: dict = {}
         for rel_id, schema in items:
             if trunc_by_rel.get(rel_id) is not None:
@@ -422,54 +347,26 @@ def _replay_batch(
         rel_rows = filtered.filter(F.col("rel_id") == rel_id)
         # agg-based LWW pre-bucketed on the lake layout: ONE payload
         # shuffle feeds compaction, payload fetch, merge join and the
-        # partitioned write (see apply.compact_agg). WAL_COMPACT=window
-        # switches to the window-sort path (A/B knob).
+        # partitioned write (see apply.compact_agg)
         t_lsn = trunc_by_rel.get(rel_id)
         use_delta = cfg.delta_commits and t_lsn is None
-        if _os.environ.get("WAL_COMPACT") == "window":
-            from .lake.table import BUCKET_COL, _bucket_expr
-
-            typed = typed_changes(rel_rows, schema)
-            if not use_delta:
-                # same prebucketed one-shuffle shape as the agg path:
-                # bucket stamped + repartitioned BEFORE the window, and
-                # the windows partition by (bucket, keys) — the single
-                # exchange then feeds window sort, merge join and the
-                # partitioned write (the A/B knob compares compaction
-                # strategies, not merge plans)
-                typed = typed.withColumn(
-                    BUCKET_COL,
-                    _bucket_expr(schema.key_columns, rel_table.num_buckets),
-                ).repartition(rel_table.num_buckets, F.col(BUCKET_COL))
-            # barrier comes from the census — same job count as the
-            # default agg path (no dedicated truncate collect)
-            compacted, _ = compact_for_merge(typed, schema, t_lsn=t_lsn)
-            merge_input = compacted.select(
-                *([BUCKET_COL] if not use_delta else []),
-                *schema.key_columns,
-                *schema.value_columns,
-                *[f"__set_{c}" for c in schema.value_columns],
-                *[f"__setlsn_{c}" for c in schema.value_columns],
-                "lsn",
-                "op",
+        compacted = apply_op.compact_agg(
+            rel_rows, schema,
+            # the bucket repartition exists to align the merge join +
+            # partitioned write; a delta append has neither, so the
+            # compaction groups at session width and append_delta
+            # stamps the bucket COLUMN itself (one fewer exchange on
+            # the per-trigger hot path)
+            num_buckets=None if use_delta else rel_table.num_buckets,
+            pre_salt=pre_salt,
+            storm_txs=storm_txs or None,
+        )
+        if t_lsn is not None:
+            # keys fully before the barrier are wiped by the merge's
+            # truncate handling; their change rows must not resurrect them
+            compacted = compacted.filter(
+                (F.col("lsn") > F.lit(t_lsn)) | (F.col("op") == "D")
             )
-        else:
-            compacted = apply_op.compact_agg(
-                rel_rows, schema,
-                # the bucket repartition exists to align the merge join +
-                # partitioned write; a delta append has neither, so the
-                # compaction groups at session width and append_delta
-                # stamps the bucket COLUMN itself (one fewer exchange on
-                # the per-trigger hot path)
-                num_buckets=None if use_delta else rel_table.num_buckets,
-                pre_salt=pre_salt,
-                storm_txs=storm_txs or None,
-            )
-            if t_lsn is not None:
-                compacted = compacted.filter(
-                    (F.col("lsn") > F.lit(t_lsn)) | (F.col("op") == "D")
-                )
-            merge_input = compacted  # carries __bucket: one-shuffle merge
         if use_delta:
             # merge-on-read commit (live-tail latency path): append the
             # compacted set as a delta generation — the epoch's only
@@ -480,7 +377,7 @@ def _replay_batch(
             if fold is None and rel_table.delta_count >= cfg.delta_fold_every:
                 rel_table.fold_deltas()
             return schema.qualified_name, rel_table.append_delta(
-                merge_input,
+                compacted,
                 batch_key=f"{batch_key}:{schema.qualified_name}",
                 high_lsn=high_lsn,
                 registry_json=None if is_catalog else registry.to_json(),
@@ -489,7 +386,7 @@ def _replay_batch(
         if fold is not None:
             rel_table.commit_fold(fold)
         mstats = rel_table.merge_batch(
-            merge_input,
+            compacted,  # carries __bucket: one-shuffle merge
             batch_key=f"{batch_key}:{schema.qualified_name}",
             high_lsn=high_lsn,
             truncate_lsn=t_lsn,
@@ -522,7 +419,6 @@ def _replay_batch(
         table.properties["registry"] = registry.to_json()
         table.save_properties()
 
-    mark("merges")
     if stats["tables"] and all(m.get("noop") for m in stats["tables"].values()):
         stats["noop"] = True
 

@@ -152,10 +152,13 @@ def _apply_pipeline(
 
     committed = stamp_table_names(committed, registry)
     filtered, _obs = allowlist_filter(committed, filter_tables, observe=False)
-    typed = typed_changes(filtered, schema)
-    final = apply_op.final_state(
-        typed, schema.key_columns, schema.value_columns, schema.value_columns
-    )
+    # the engine's LWW kernel, then the batch-local drops: a final
+    # DELETE removes the key, the truncate barrier every key it covers
+    rel_rows = filtered.filter(F.col("rel_id") == schema.rel_id)
+    final = apply_op.compact_agg(rel_rows, schema).filter(F.col("op") != "D")
+    t_lsn = apply_op.truncate_barrier_lsn(rel_rows)
+    if t_lsn is not None:
+        final = final.filter(F.col("lsn") > F.lit(t_lsn))
     return final.select(
         "repo",
         "path",
@@ -261,7 +264,8 @@ def q_cdc_tailing_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_lww_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Operator-level apply (window LWW + TOAST carry-forward), no sink."""
+    """Operator-level apply (the engine's struct-max LWW kernel + TOAST
+    carry-forward), no sink."""
     return _final_state_df(spark, sf_dir)
 
 
