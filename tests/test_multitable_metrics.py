@@ -18,11 +18,11 @@ def _rel(lsn, rel_id, name, cols):
     )
 
 
-def _tx(rows, k, rel_id, lsn0, vals):
+def _tx(rows, k, rel_id, lsn0, vals, op="I"):
     ts = datetime.datetime(2024, 1, 1)
     rows.append((lsn0, k, -1, "B", None, None, None, None, None, None, None, ts, None))
     rows.append(
-        (lsn0 + 1, k, 0, "I", rel_id, None, None, None, None, vals, [], None, None)
+        (lsn0 + 1, k, 0, op, rel_id, None, None, None, None, vals, [], None, None)
     )
     rows.append((lsn0 + 2, k, 99, "C", None, None, None, None, None, None, None, ts, None))
 
@@ -500,3 +500,52 @@ def test_grouped_merge_matches_single_table_state(spark, tmp_path):
                 for name, m in st["tables"].items()
             }
             assert got_counts == want_counts[key], (key, mode, got_counts)
+
+
+def test_grouped_merge_truncate_watermark_and_untouched_members(spark, tmp_path):
+    """Grouped merges (3 same-schema relations) in both merge modes:
+    (1) a member's stored truncate watermark filters its change rows —
+    a late insert below an earlier TRUNCATE must not come back, exactly
+    as on the per-table path; (2) in selective mode a member without
+    change rows in the epoch rewrites no bucket and keeps its files."""
+    from wal_listener_spark.lake.catalog import LakeCatalog
+
+    names = {r: f"public_t{r}" for r in (1, 2, 3)}
+
+    def _epoch(rows):
+        return spark.createDataFrame(rows, TRACE_SCHEMA)
+
+    e0 = [_rel(r, r, f"t{r}", ["k", "v"]) for r in names]
+    for r in names:
+        for i in range(4):
+            _tx(e0, 10 * r + i, r, 100 * r + 10 * i, {"k": f"k{i}", "v": f"e0-{r}-{i}"})
+    e1 = [(5000, -2, 0, "T", 1, None, None, None, None, None, None, None, 0)]
+    e2 = []
+    _tx(e2, 500, 1, 3000, {"k": "late", "v": "x"})  # below t1's truncate
+    _tx(e2, 501, 2, 6000, {"k": "k0", "v": "e2-2"}, op="U")
+    _tx(e2, 502, 3, 6010, {"k": "k1", "v": "e2-3"}, op="U")
+    e3 = []
+    _tx(e3, 600, 2, 7000, {"k": "k2", "v": "e3-2"}, op="U")
+
+    for mode in (True, False):
+        root = str(tmp_path / f"cat_{mode}")
+        LakeCatalog.create(spark, root, num_buckets=4)
+        cfg = PipelineConfig(num_buckets=4, selective_buckets=mode)
+        for key, rows in (("e0", e0), ("e1", e1), ("e2", e2)):
+            st = pipeline.replay_batch(_epoch(rows), LakeCatalog.load(spark, root), cfg, key)
+        assert all(m.get("grouped") for m in st["tables"].values()), st
+        cat = LakeCatalog.load(spark, root)
+        assert cat.read_public(names[1]).count() == 0, f"selective_buckets={mode}"
+        assert {r["k"]: r["v"] for r in cat.read_public(names[2]).collect()} == {
+            "k0": "e2-2", "k1": "e0-2-1", "k2": "e0-2-2", "k3": "e0-2-3",
+        }
+
+        before = {n: cat.table(n).manifest["buckets"] for n in names.values()}
+        st = pipeline.replay_batch(_epoch(e3), cat, cfg, "e3")
+        cat = LakeCatalog.load(spark, root)
+        assert st["tables"][names[2]]["upserts"] == 1
+        assert {r["k"]: r["v"] for r in cat.read_public(names[2]).collect()}["k2"] == "e3-2"
+        if mode:
+            for n in (names[1], names[3]):
+                assert st["tables"][n]["buckets_rewritten"] == [], (n, st["tables"][n])
+                assert cat.table(n).manifest["buckets"] == before[n], n

@@ -103,24 +103,78 @@ def test_compaction_branch_exchange_counts(spark, trace_dir):
         assert plan.count("Exchange") == want, (name, plan)
 
 
-def test_merge_reuses_bucket_partitioning(spark, trace_dir, tmp_path):
-    """End-to-end replay plan: the merge join + partitioned write add no
-    exchange on the change side beyond the single bucket repartition
-    (target side gets its own aligned exchange)."""
+def _hash_exchanges(plan: str) -> int:
+    """Hash exchanges in an executed plan, with the cached subtree of an
+    InMemoryRelation counted once (its executed adaptive plan prints the
+    final plan and then, as its last child, the ``== Initial Plan ==``
+    again, rooted at the marker's own indent)."""
+    n, skip = 0, None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :+-"))
+        if skip is not None and indent >= skip:
+            continue
+        skip = indent if "== Initial Plan ==" in line else None
+        n += "Exchange hashpartitioning" in line
+    return n
+
+
+def test_merge_reuses_bucket_partitioning(spark, tmp_path, monkeypatch):
+    """Hash exchanges in the plan of the frame the merge hands to the
+    parquet writer, for the bare table and the catalog's grouped merge
+    (3 same-schema relations), wide and selective, into empty and into
+    populated targets: the compaction's bucket repartition and the
+    target's alignment to it — nothing else. The join reuses the change
+    side's (rel_id, bucket) partitioning and the write needs no shuffle
+    of its own, also when a constant-tagged empty target could fold
+    rel_id out of the join keys."""
+    from pyspark.sql import DataFrameWriter
+
+    from tests.test_multitable_metrics import _rel, _tx
     from wal_listener_spark.config import PipelineConfig
+    from wal_listener_spark.lake.catalog import LakeCatalog, load_target
     from wal_listener_spark.lake.table import LakeTable
     from wal_listener_spark.pipeline import replay_batch
 
-    tb = LakeTable.create(
-        spark, str(tmp_path / "t"), ["repo", "path"], FIELDS, num_buckets=8
-    )
-    tr = spark.read.schema(TRACE_SCHEMA).parquet(trace_dir)
-    stats = replay_batch(tr, tb, PipelineConfig(num_buckets=8), "b0")
-    assert not stats["noop"]
-    # correctness of the one-shuffle path is covered by test_replay; here
-    # we only require the merge to have applied through the prebucketed
-    # branch (bucket column was carried by the change set)
-    assert stats["tables"]["public_repos"]["buckets_rewritten"]
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def _capture(self, path, *a, **k):
+        plans.append(_plan(self._df))
+        return write(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", _capture)
+
+    def _trace(rel_ids):
+        rows = [_rel(r, r, f"t{r}", ["k", "v"]) for r in rel_ids]
+        for r in rel_ids:
+            for i in range(6):
+                _tx(rows, 10 * r + i, r, 100 * r + 10 * i, {"k": f"k{i}", "v": f"v{i}"})
+        return spark.createDataFrame(rows, TRACE_SCHEMA)
+
+    got = {}
+    for mode in ("wide", "selective"):
+        cfg = PipelineConfig(num_buckets=4, selective_buckets=mode == "selective")
+        bare = str(tmp_path / f"bare_{mode}")
+        LakeTable.create(
+            spark, bare, ["k"], [("k", "string"), ("v", "string")], num_buckets=4
+        )
+        cat = str(tmp_path / f"cat_{mode}")
+        LakeCatalog.create(spark, cat, num_buckets=4)
+        for target, root, trace in (
+            ("bare", bare, _trace([1])), ("catalog", cat, _trace([1, 2, 3]))
+        ):
+            for state, key in (("empty", "b0"), ("populated", "b1")):
+                plans.clear()
+                stats = replay_batch(trace, load_target(spark, root), cfg, key)
+                assert not stats["noop"], stats
+                assert len(plans) == 1, (target, mode, state, len(plans))
+                got[target, mode, state] = _hash_exchanges(plans[0])
+    assert got == {
+        (t, m, s): 2
+        for t in ("bare", "catalog")
+        for m in ("wide", "selective")
+        for s in ("empty", "populated")
+    }, got
 
 
 def test_wide_mode_merge_single_pass(spark, trace_dir, tmp_path):

@@ -60,8 +60,6 @@ class PipelineConfig:
     #: scheduler interleaves jobs; each relation commits its own table).
     #: 1 = strictly serial.
     max_parallel_merges: int = 4
-    #: quarantine instead of fail-stop on integrity violations
-    quarantine_uncommitted: bool = True
 
     def validate(self) -> None:
         """config.Validate() analog (config.go:82-93)."""

@@ -34,13 +34,17 @@ class keeps identical semantics without the jar.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as SparkTypes
+
+from ..operators.apply import _part_spec
 
 LSN_COL = "__lsn"
 BUCKET_COL = "__bucket"
@@ -81,10 +85,9 @@ def _merge_out_cols(
 ) -> list:
     """Output expressions of the full-outer MERGE between a target
     snapshot aliased ``t`` and a compacted change set aliased ``c`` —
-    THE single definition of the apply semantics, shared by the
-    per-table merge and the catalog's grouped many-table merge.
-    ``extra_cols`` pass through via coalesce(t, c) (e.g. the relation
-    id of a grouped merge)."""
+    THE single definition of the apply semantics, used by
+    :func:`merge_tables`. ``extra_cols`` pass through via coalesce(t, c)
+    (the relation id of a grouped merge)."""
     c_lsn = F.col("c.lsn")
     t_lsn = F.col(f"t.{LSN_COL}")
     has_c = c_lsn.isNotNull()
@@ -165,6 +168,223 @@ def _merge_out_cols(
     for e in extra_cols:
         out_cols.append(F.coalesce(F.col(f"t.{e}"), F.col(f"c.{e}")).alias(e))
     return out_cols
+
+
+def _change_counts(sel=None, sfx: str = "") -> list:
+    """Upsert/delete counters ``n{sfx}``/``nd{sfx}`` over the change rows
+    ``sel`` selects (every row when None)."""
+    is_del = F.col("op") == "D"
+    return [
+        F.count(F.lit(1) if sel is None else F.when(sel, 1)).alias(f"n{sfx}"),
+        F.sum(
+            F.when(is_del if sel is None else sel & is_del, 1).otherwise(0)
+        ).alias(f"nd{sfx}"),
+    ]
+
+
+def merge_tables(
+    members: list[tuple["LakeTable", str, int | None]],
+    changes: DataFrame,
+    high_lsn: int,
+    new_dir: Callable[[], str],
+    truncate_lsn: int | None = None,
+    coalesce_cols: list[str] | None = None,
+    registry_json: list[dict] | None = None,
+    selective: bool = True,
+    tag_col: str | None = None,
+    num_partitions: int | None = None,
+) -> list[dict]:
+    """THE copy-on-write MERGE: one plan applies a compacted change set to
+    N member tables of one schema and bucket count; each member then
+    commits its own snapshot. Returns the members' stats, in order.
+
+    ``members``: (table, batch_key, tag). A single-table merge has one
+    member tagged None. A grouped merge tags each member with its value
+    of ``tag_col`` (the relation id), which the change rows carry and
+    which joins, partitions and writes as a leading key column — the way
+    ``compact_agg``'s ``extra_group_cols`` generalise the compaction.
+    Per member: a committed ``batch_key`` is a replayed-epoch no-op
+    (dropped before the plan is built, so a crash between two members'
+    commits re-runs only the uncommitted ones), pending deltas fold
+    first, and the change rows are filtered at the member's truncate
+    watermark (the stored one or this epoch's ``truncate_lsn``, whichever
+    is higher).
+
+    ``selective=True`` (incremental epochs without a truncate): a stats
+    pre-pass materializes the change set once (persist) and collects
+    each member's touched buckets, so the merge reads and rewrites ONLY
+    those — a member without change rows rewrites nothing. Otherwise
+    (wide batches: backfills, full replays, truncates): no pre-pass —
+    every bucket is read, the change pipeline runs exactly once, inside
+    the write job, and the counters ride it via ``observe``.
+
+    Prebucketed changes (``__bucket`` present and partitioned on (tag,
+    bucket) at ``num_partitions`` width — ``compact_agg``'s layout) keep
+    their partitioning: the tagged union of the members' target reads is
+    aligned to it, so the full-outer join on (tag, bucket, keys) and the
+    write need no exchange on the change side. ONE write, partitioned by
+    (tag, bucket), lands under ``new_dir()`` (called after the folds) and
+    each member commits its slice by root-relative paths.
+    """
+    out: list[dict | None] = [None] * len(members)
+    todo = []
+    for i, (tb, batch_key, tag) in enumerate(members):
+        if batch_key in tb.properties.get("committed_batches", {}):
+            out[i] = {"batch_key": batch_key, "noop": True, "reason": "replayed_epoch"}
+            continue
+        # pending merge-on-read deltas fold into the base first: the
+        # target read and selective bucket accounting assume the base
+        # files ARE the state
+        tb.fold_deltas()
+        todo.append((i, tb, batch_key, tag))
+    if not todo:
+        return out
+
+    first = todo[0][1]
+    key_cols = first.key_cols
+    value_cols = [f["name"] for f in first.manifest["schema"] if f["name"] not in key_cols]
+    num_buckets = first.num_buckets
+    extra = [tag_col] if tag_col else []
+    tags = [tag for *_, tag in todo]
+    sfxs = ["" if t is None else f"_{t}" for t in tags]
+
+    def _by_tag(rows) -> dict:
+        return {(r[tag_col] if tag_col else None): r for r in rows}
+
+    chg = changes
+    if tag_col:
+        chg = chg.filter(F.col(tag_col).isin(tags))
+    prebucketed = BUCKET_COL in chg.columns
+    for _, tb, _, tag in todo:
+        # truncate watermark: wipes everything applied before it, and
+        # blocks any later-arriving pre-truncate change from resurrecting
+        trunc = max(
+            tb.properties.get("truncate_lsn", -1),
+            -1 if truncate_lsn is None else truncate_lsn,
+        )
+        if trunc >= 0:
+            keep = (F.col("lsn") > F.lit(trunc)) | (F.col("op") == "D")
+            chg = chg.filter(keep if tag is None else (F.col(tag_col) != tag) | keep)
+    if not prebucketed:
+        chg = chg.withColumn(BUCKET_COL, _bucket_expr(key_cols, num_buckets))
+
+    observation = persisted = None
+    try:
+        if selective and truncate_lsn is None:
+            # one materialization of the (expensive) upstream pipeline,
+            # reused by the stats pass and the merge join/write (the
+            # cache preserves the bucket partitioning for the join below)
+            chg = persisted = chg.persist()
+            counts = _by_tag(
+                chg.groupBy(*extra).agg(
+                    *_change_counts(), F.collect_set(BUCKET_COL).alias("bks")
+                ).collect()
+            )
+            affected = [sorted(counts[t]["bks"]) if t in counts else [] for t in tags]
+        else:
+            observation = Observation(f"merge-{uuid.uuid4().hex}")
+            chg = chg.observe(observation, *[
+                agg for t, sfx in zip(tags, sfxs)
+                for agg in _change_counts(None if t is None else F.col(tag_col) == t, sfx)
+            ])
+            affected = [list(range(num_buckets)) for _ in tags]
+
+        tag_type = chg.schema[tag_col].dataType if tag_col else None
+
+        def _target(t: DataFrame, tag) -> DataFrame:
+            t = t.withColumn(BUCKET_COL, _bucket_expr(key_cols, num_buckets))
+            if truncate_lsn is not None:
+                t = t.filter(F.col(LSN_COL) > F.lit(truncate_lsn))
+            if tag is not None:
+                t = t.withColumn(tag_col, F.lit(tag).cast(tag_type))
+            return t
+
+        # a member without committed files in its affected buckets adds
+        # nothing to the union (16 unioned empty relations planned ~500
+        # zero-row exchange tasks: 8 s of scheduling on a first-epoch
+        # catalog backfill)
+        parts = [
+            _target(tb.read(aff, with_deltas=False), tag)
+            for (_, tb, _, tag), aff in zip(todo, affected)
+            if tb._bucket_files(aff)
+        ]
+        if not parts:
+            # no target rows anywhere: one typed empty frame. Its tag is a
+            # column, not a constant — a constant tag folds out of the
+            # join keys and both sides re-exchange on (bucket, keys)
+            empty = first.read([], with_deltas=False)
+            if tag_col:
+                empty = first.spark.createDataFrame(
+                    [], first._read_schema().add(tag_col, tag_type)
+                )
+            parts = [_target(empty, None)]
+        target = functools.reduce(DataFrame.unionByName, parts)
+        if prebucketed:
+            # align the target to the change side's (tag, bucket)
+            # partitioning: the join below then needs NO exchange on the
+            # change side and its output is already laid out for the
+            # partitioned write
+            target = target.repartition(*_part_spec(extra, num_buckets, num_partitions))
+
+        # plain equality (keys are non-null by construction). With
+        # prebucketed input the bucket column joins too: hash-partitioning
+        # on (tag, bucket) satisfies the clustered distribution of (tag,
+        # bucket, keys), so both sides stay put (one-shuffle merge).
+        on = extra + ([BUCKET_COL] if prebucketed else []) + list(key_cols)
+        joined = target.alias("t").join(
+            chg.alias("c"), [F.col(f"t.{c}") == F.col(f"c.{c}") for c in on], "full_outer"
+        )
+        result = joined.select(
+            *_merge_out_cols(
+                key_cols, value_cols, set(chg.columns), coalesce_cols or [],
+                extra_cols=tuple(extra),
+            )
+        )
+        if not prebucketed:
+            # cluster rows by bucket for the partitioned write
+            result = result.repartition(
+                max(sum(map(len, affected)), 1), *[F.col(c) for c in extra], F.col(BUCKET_COL)
+            )
+        # prebucketed: join output is already (tag, bucket)-partitioned —
+        # the write's per-task dynamic partitioning needs no extra shuffle
+        out_dir = new_dir()
+        result.write.partitionBy(*extra, BUCKET_COL).mode("overwrite").parquet(out_dir)
+
+        if observation is not None:
+            try:
+                m = observation.get  # filled by the write job above
+                counts = {
+                    t: {"n": m[f"n{sfx}"], "nd": m[f"nd{sfx}"]}
+                    for t, sfx in zip(tags, sfxs)
+                }
+            except Exception:
+                # AQE's runtime empty-relation propagation can eliminate
+                # the CollectMetrics node when the change set turns out
+                # empty at runtime (e.g. a truncate-only epoch) — the
+                # observation then holds no row. Recount directly: one
+                # extra job on what is almost always an empty frame.
+                counts = _by_tag(chg.groupBy(*extra).agg(*_change_counts()).collect())
+    finally:
+        # unpersist on EVERY exit — success or a failure anywhere between
+        # the persist and the write (stats collect, target read, join/plan
+        # analysis, parquet write). A leaked cached frame lives in the
+        # executor cache for the session, and foreachBatch retries would
+        # pile leaks up.
+        if persisted is not None:
+            persisted.unpersist()
+
+    for (i, tb, batch_key, tag), aff in zip(todo, affected):
+        c = counts.get(tag)
+        n, nd = (c["n"], c["nd"] or 0) if c is not None else (0, 0)
+        member_dir = out_dir if tag is None else os.path.join(out_dir, f"{tag_col}={tag}")
+        # a truncate epoch's affected set is every bucket, so the swap
+        # drops every pre-truncate file
+        out[i] = tb.commit_external_buckets(
+            batch_key, high_lsn, tb._written_buckets(member_dir),
+            aff, upserts=n - nd, deletes=nd,
+            truncate_lsn=truncate_lsn, registry_json=registry_json,
+        )
+    return out
 
 
 class LakeTable:
@@ -325,7 +545,9 @@ class LakeTable:
         registry_json: list[dict] | None = None,
         selective: bool = True,
     ) -> dict:
-        """Exactly-once MERGE of a compacted change set.
+        """Exactly-once MERGE of a compacted change set: the single-table
+        form of :func:`merge_tables` (one untagged member), writing the
+        table's next ``data/v{N}`` dir.
 
         ``changes``: ONE row per key (already LWW-compacted batch-locally)
         with columns = key cols + value cols + ``lsn`` + ``op``
@@ -348,163 +570,15 @@ class LakeTable:
         ordering promise) and the final state still converges to the
         sequential-oracle result.
 
-        ``selective=True`` (incremental epochs): a stats pre-pass
-        materializes the change set once (persist) and collects the
-        touched-bucket set, so the merge reads and rewrites ONLY touched
-        buckets — the point of the layout at 100 TB, where an epoch
-        touches a fraction of keys. ``selective=False`` (wide batches:
-        full replays, backfills, anything touching most buckets): skip
-        the pre-pass entirely — every bucket is read, the change pipeline
-        runs exactly once (no persist barrier, no extra scan), and the
-        upsert/delete counters ride the write job via ``observe``. One
-        job instead of two: the fixed-latency floor per epoch drops,
-        which is what bounds scaling efficiency on bounded replays.
+        ``selective`` picks between the stats pre-pass and the wide
+        single-job form (see :func:`merge_tables`).
         """
-        committed = self.properties.get("committed_batches", {})
-        if batch_key in committed:
-            return {"batch_key": batch_key, "noop": True, "reason": "replayed_epoch"}
-        # pending merge-on-read deltas fold into the base first: the
-        # merge's target read and selective bucket accounting assume the
-        # base files ARE the state
-        self.fold_deltas()
-
-        cleanup: list[DataFrame] = []
-        try:
-            return self._merge_batch_impl(
-                changes, batch_key, high_lsn, truncate_lsn, coalesce_cols,
-                registry_json, selective, cleanup,
-            )
-        finally:
-            # unpersist on EVERY exit — success or a failure anywhere
-            # between the persist and the write (stats collect, target
-            # read, join/plan analysis, parquet write). A leaked cached
-            # frame lives in the executor cache for the session, and
-            # foreachBatch retries would pile leaks up.
-            for df in cleanup:
-                df.unpersist()
-
-    def _merge_batch_impl(
-        self,
-        changes: DataFrame,
-        batch_key: str,
-        high_lsn: int,
-        truncate_lsn: int | None,
-        coalesce_cols: list[str] | None,
-        registry_json: list[dict] | None,
-        selective: bool,
-        cleanup: list[DataFrame],
-    ) -> dict:
-        key_cols = self.key_cols
-        value_cols = [f["name"] for f in self.manifest["schema"] if f["name"] not in key_cols]
-        coalesce_cols = coalesce_cols or []
-
-        # truncate watermark: wipes everything applied before it, and
-        # blocks any later-arriving pre-truncate change from resurrecting
-        prev_trunc = self.properties.get("truncate_lsn", -1)
-        eff_trunc = max(prev_trunc, truncate_lsn if truncate_lsn is not None else -1)
-
-        chg = changes
-        prebucketed = BUCKET_COL in chg.columns
-        if eff_trunc >= 0:
-            chg = chg.filter((F.col("lsn") > F.lit(eff_trunc)) | (F.col("op") == "D"))
-        if not prebucketed:
-            chg = chg.withColumn(BUCKET_COL, _bucket_expr(key_cols, self.num_buckets))
-        observation = None
-        if selective and truncate_lsn is None:
-            # one materialization of the (expensive) upstream pipeline,
-            # reused by the stats pass and the merge join/write (the
-            # cache preserves the bucket partitioning for the join below);
-            # registered for unconditional unpersist in merge_batch's
-            # try/finally
-            chg = chg.persist()
-            cleanup.append(chg)
-            stats_row = chg.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("nd"),
-                F.collect_set(BUCKET_COL).alias("bks"),
-            ).collect()[0]
-            n_changes = stats_row["n"]
-            n_deletes = stats_row["nd"] or 0
-            affected = list(stats_row["bks"])
-        else:
-            # wide batch (or truncate, which rewrites everything anyway):
-            # no pre-pass — counters ride the write job
-            from pyspark.sql import Observation
-
-            observation = Observation(f"merge-{uuid.uuid4().hex}")
-            chg = chg.observe(
-                observation,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("nd"),
-            )
-            affected = list(range(self.num_buckets))
-
-        target = self.read(affected if affected else []).withColumn(
-            BUCKET_COL, _bucket_expr(key_cols, self.num_buckets)
-        )
-        if truncate_lsn is not None:
-            target = target.filter(F.col(LSN_COL) > F.lit(truncate_lsn))
-        if prebucketed:
-            # align the target to the change side's bucket partitioning;
-            # the join below then needs NO exchange on the change side and
-            # its output is already laid out for the partitioned write
-            target = target.repartition(self.num_buckets, F.col(BUCKET_COL))
-
-        t = target.alias("t")
-        c = chg.alias("c")
-        # plain equality (keys are non-null by construction). With
-        # prebucketed input the bucket column joins too: hash-partitioning
-        # on the bucket alone satisfies the clustered distribution of
-        # (bucket, keys), so both sides stay put (one-shuffle merge).
-        cond = [F.col(f"t.{k}") == F.col(f"c.{k}") for k in key_cols]
-        if prebucketed:
-            cond = [F.col(f"t.{BUCKET_COL}") == F.col(f"c.{BUCKET_COL}")] + cond
-        joined = t.join(c, cond, "full_outer")
-
-        result = joined.select(
-            *_merge_out_cols(key_cols, value_cols, set(chg.columns), coalesce_cols)
-        )
-
-        new_version = self.manifest["version"] + 1
-        rel_dir = f"data/v{new_version}"
-        out_dir = os.path.join(self.root, rel_dir)
-        if not prebucketed:
-            # cluster rows by bucket for the partitioned write
-            result = result.repartition(max(len(affected), 1), F.col(BUCKET_COL))
-        # prebucketed: join output is already bucket-partitioned — the
-        # write's per-task dynamic partitioning needs no extra shuffle
-        (
-            result.write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-
-        if observation is not None:
-            try:
-                m = observation.get  # filled by the write job above
-                n_changes = m["n"]
-                n_deletes = m["nd"] or 0
-            except Exception:
-                # AQE's runtime empty-relation propagation can eliminate
-                # the CollectMetrics node when the change set turns out
-                # empty at runtime (e.g. a truncate-only epoch) — the
-                # observation then holds no row. Recount directly: one
-                # extra job on what is almost always an empty frame.
-                row = chg.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(
-                        F.when(F.col("op") == "D", 1).otherwise(0)
-                    ).alias("nd"),
-                ).collect()[0]
-                n_changes = row["n"]
-                n_deletes = row["nd"] or 0
-        # a truncate epoch's affected set is every bucket, so the swap
-        # drops every pre-truncate file
-        return self.commit_external_buckets(
-            batch_key, high_lsn, self._written_buckets(rel_dir), affected,
-            upserts=n_changes - n_deletes, deletes=n_deletes,
-            truncate_lsn=truncate_lsn, registry_json=registry_json,
-        )
+        return merge_tables(
+            [(self, batch_key, None)], changes, high_lsn,
+            lambda: os.path.join(self.root, f"data/v{self.manifest['version'] + 1}"),
+            truncate_lsn=truncate_lsn, coalesce_cols=coalesce_cols,
+            registry_json=registry_json, selective=selective,
+        )[0]
 
     # ---------------------------------------------- merge-on-read deltas
     # The LIVE-tail commit path (Iceberg v2 / Flink CDC shape): a trigger
@@ -790,7 +864,7 @@ class LakeTable:
                 .mode("overwrite")
                 .parquet(os.path.join(self.root, rel_dir))
             )
-            new_buckets = self._written_buckets(rel_dir)
+            new_buckets = self._written_buckets(os.path.join(self.root, rel_dir))
         stats = {
             "batch_key": f"fold-v{self.manifest['version']}",
             "noop": False,
@@ -960,7 +1034,7 @@ class LakeTable:
             .mode("overwrite")
             .parquet(out_dir)
         )
-        new_buckets = self._written_buckets(rel_dir)
+        new_buckets = self._written_buckets(os.path.join(self.root, rel_dir))
         self.manifest["version"] = new_version
         self.manifest["buckets"] = new_buckets
         stats = {
@@ -1019,13 +1093,16 @@ class LakeTable:
         }
 
     # ------------------------------------------------------- bookkeeping
-    def _written_buckets(self, rel_dir: str) -> dict[str, list[str]]:
-        """Root-relative parquet files per bucket of a dataset written
-        ``partitionBy(BUCKET_COL)`` under ``rel_dir``."""
-        out_dir = os.path.join(self.root, rel_dir)
+    def _written_buckets(self, out_dir: str) -> dict[str, list[str]]:
+        """Parquet files per bucket of a dataset written
+        ``partitionBy(BUCKET_COL)`` into ``out_dir``, as paths relative to
+        this table's root (``out_dir`` may lie outside it: a grouped
+        merge's shared dir). Empty when nothing was written there."""
+        if not os.path.isdir(out_dir):
+            return {}
         return {
             entry.split("=", 1)[1]: [
-                f"{rel_dir}/{entry}/{fn}"
+                os.path.relpath(os.path.join(out_dir, entry, fn), self.root)
                 for fn in os.listdir(os.path.join(out_dir, entry))
                 if fn.endswith(".parquet")
             ]

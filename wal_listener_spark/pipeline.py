@@ -241,7 +241,7 @@ def _replay_batch(
     n_quarantined = sum(r["n_changes"] for r in bad_rows)
 
     committed = trace.filter(F.col("op").isin("I", "U", "D", "T"))
-    if bad_txs and cfg.quarantine_uncommitted:
+    if bad_txs:
         committed = committed.filter(~F.col("tx_id").isin(bad_txs))
     committed = stamp_table_names(committed, registry)
 
@@ -361,12 +361,6 @@ def _replay_batch(
             pre_salt=pre_salt,
             storm_txs=storm_txs or None,
         )
-        if t_lsn is not None:
-            # keys fully before the barrier are wiped by the merge's
-            # truncate handling; their change rows must not resurrect them
-            compacted = compacted.filter(
-                (F.col("lsn") > F.lit(t_lsn)) | (F.col("op") == "D")
-            )
         if use_delta:
             # merge-on-read commit (live-tail latency path): append the
             # compacted set as a delta generation — the epoch's only
